@@ -17,32 +17,31 @@ A user of ``n2kupdate`` maps 1:1:
     store_species_group_species(...)   store.store_species_group_species(...)
 
 Validation mirrors the reference's assertthat guards: required columns
-present, no NULL in natural-key columns, junk columns rejected — errors
-raised *before* any write (all-or-nothing batch semantics come from the
-transactional merge in sources/jdbc.py).
+present and junk columns rejected (checked on the schema, before anything
+runs), no NULL in natural-key columns (checked by one probe query on the
+staged batch, before the merge touches the target). Either way the call
+raises ``ValidationError`` and the target is unchanged (all-or-nothing
+batch semantics come from the transactional merge in sources/jdbc.py).
+Rows repeating a fingerprint are resolved by the merge SQL, which keeps
+one deterministic winner.
 
 Scale notes: fingerprints are computed executor-side as Spark columns
 (md5 of '|'-joined natural keys — SURVEY.md §7.4.1: sha1 kept as an opt-in
-because the DuckDB oracle lacks it); staging writes go executor→database in
-parallel; the merge is one set-based statement on the server. Nothing here
+because the DuckDB oracle lacks it); a ``store_*`` call runs ONE Spark job,
+the staging write; the merge is set-based SQL on the server. Nothing here
 collects a fact table to the driver.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from n2kupdate_spark.functions import fingerprint
-from n2kupdate_spark.sources.jdbc import upsert
-
-
-class ValidationError(ValueError):
-    """Junk input rejected before touching the database (reference:
-    assertthat errors)."""
+from n2kupdate_spark.sources.jdbc import ValidationError, upsert
 
 
 @dataclass(frozen=True)
@@ -52,7 +51,7 @@ class TableSpec:
     name: str
     natural_key: Sequence[str]
     attributes: Sequence[str] = ()
-    mode: str = "scd1"  # scd1 | insert_ignore | set_replace
+    mode: str = "scd1"  # scd1 | insert_ignore | set_replace | scd2_changes
     group_key: Sequence[str] = ()  # set_replace only: the replaced scope
 
     @property
@@ -129,22 +128,16 @@ FINGERPRINT_COL = "fingerprint"
 
 
 def validate_frame(df: DataFrame, spec: TableSpec) -> DataFrame:
-    """The reference's input guards: required columns present (extra columns
-    beyond the spec rejected), natural-key columns non-NULL. Returns the
-    frame projected to spec order."""
+    """The reference's column guards, on the schema alone (no Spark job):
+    required columns present, extra columns beyond the spec rejected.
+    Returns the frame projected to spec order. NULL natural keys are
+    rejected later, by ``upsert``'s probe on the staged batch."""
     missing = [c for c in spec.columns if c not in df.columns]
     if missing:
         raise ValidationError(f"{spec.name}: missing required columns {missing}")
     extra = [c for c in df.columns if c not in spec.columns]
     if extra:
         raise ValidationError(f"{spec.name}: unexpected columns {extra}")
-    # no-NA on the natural key — checked *before* any write.
-    any_null = F.lit(False)
-    for c in spec.natural_key:
-        any_null = any_null | F.col(c).isNull()
-    n_bad = df.filter(any_null).count()
-    if n_bad:
-        raise ValidationError(f"{spec.name}: {n_bad} rows with NULL natural-key values")
     return df.select(*spec.columns)
 
 
@@ -154,49 +147,55 @@ def add_fingerprint(df: DataFrame, spec: TableSpec, algo: str = "md5") -> DataFr
     return df.withColumn(FINGERPRINT_COL, fingerprint(list(spec.natural_key), algo))
 
 
+def _first_per_fingerprint(df: DataFrame, spec: TableSpec) -> DataFrame:
+    """One row per fingerprint — the row the merge SQL keeps from a batch
+    that repeats one: first in ascending order of the spec columns, NULLs
+    last (sources.jdbc._source). Lazy: no job runs unless the caller acts."""
+    order = [F.col(c).asc_nulls_last() for c in spec.columns]
+    rn = F.row_number().over(Window.partitionBy(FINGERPRINT_COL).orderBy(*order))
+    return df.withColumn("n2k_rn", rn).filter("n2k_rn = 1").drop("n2k_rn")
+
+
 @dataclass
 class N2kStore:
     """Session object bundling a merge backend (the reference's ``conn``).
 
     ``backend`` is any object with the sources/jdbc.py backend protocol
-    (``write_staging`` / ``execute`` / ``drop_staging``) — DbApiBackend
-    (DuckDB, psycopg2) or SparkJdbcBackend.
+    (``write_staging`` / ``fetchone`` / ``execute`` / ``drop_staging``) —
+    DbApiBackend (DuckDB, sqlite3, PostgreSQL), PgParallelBackend or
+    SparkJdbcBackend.
     """
 
     backend: object
     schema: str = ""  # optional target-schema prefix, e.g. "public"
     hash_algo: str = "md5"
     clean: bool = True  # drop staging after merge (reference's `clean` arg)
-    _stored: list = field(default_factory=list)
 
     def _target(self, table: str) -> str:
         return f"{self.schema}.{table}" if self.schema else table
 
-    def _store(self, df: DataFrame, spec: TableSpec, dedup: bool = True) -> DataFrame:
+    def _store(self, df: DataFrame, spec: TableSpec, **merge_kwargs) -> DataFrame:
+        """validate → fingerprint → ``upsert``, whose staging write is the
+        call's one Spark job and whose probe rejects NULL natural keys."""
         frame = validate_frame(df, spec)
-        frame = add_fingerprint(frame, spec, self.hash_algo)
-        if dedup:
-            frame = frame.dropDuplicates([FINGERPRINT_COL])
-        if spec.mode == "set_replace":
-            upsert(
-                frame,
-                self._target(spec.name),
-                list(spec.group_key),
-                self.backend,
-                mode="set_replace",
-                clean=self.clean,
-            )
+        if spec.mode == "scd2_changes":  # versioned: keyed by the natural key
+            keys, unique = list(spec.natural_key), None
         else:
-            upsert(
-                frame,
-                self._target(spec.name),
-                [FINGERPRINT_COL],
-                self.backend,
-                mode=spec.mode,
-                clean=self.clean,
-            )
-        self._stored.append(spec.name)
-        return frame
+            frame = add_fingerprint(frame, spec, self.hash_algo)
+            keys = list(spec.group_key) if spec.mode == "set_replace" else [FINGERPRINT_COL]
+            unique = FINGERPRINT_COL
+        upsert(
+            frame,
+            self._target(spec.name),
+            keys,
+            self.backend,
+            mode=spec.mode,
+            clean=self.clean,
+            not_null=list(spec.natural_key),
+            unique=unique,
+            **merge_kwargs,
+        )
+        return frame if unique is None else _first_per_fingerprint(frame, spec)
 
     # --- dimension upserts (one per reference store_* export) -------------
 
@@ -304,29 +303,10 @@ class N2kStore:
         is sources.jdbc.sql_merge_scd2_changes; the pure-transform twin
         (operators.merge.merge_scd2_changes) is the oracle-checked
         semantics. The target table must carry valid_from/valid_to
-        (VARCHAR, NULL = open)."""
-        cols = keys + compare_cols
-        missing = [c for c in cols if c not in df.columns]
-        if missing:
-            raise ValidationError(f"{table}: missing required columns {missing}")
-        any_null = F.lit(False)
-        for c in keys:
-            any_null = any_null | F.col(c).isNull()
-        if df.filter(any_null).count():
-            raise ValidationError(f"{table}: NULL in key columns {keys}")
-        frame = df.select(*cols)
-        upsert(
-            frame,
-            self._target(table),
-            keys,
-            self.backend,
-            mode="scd2_changes",
-            clean=self.clean,
-            compare_cols=compare_cols,
-            batch_ts=batch_ts,
-        )
-        self._stored.append(table)
-        return frame
+        (VARCHAR, NULL = open). Validated like every other call: the
+        columns are exactly ``keys + compare_cols``, keys non-NULL."""
+        spec = TableSpec(table, tuple(keys), tuple(compare_cols), mode="scd2_changes")
+        return self._store(df, spec, compare_cols=compare_cols, batch_ts=batch_ts)
 
     def store_analysis(self, analysis: DataFrame, versions: DataFrame | None = None) -> DataFrame:
         """⟨pub⟩ R/store_analysis.R: append-only version chain in FK order —

@@ -5,9 +5,14 @@ validate → fingerprint → bulk-write a hash-named staging table → run
 insert-missing / update-changed / close-removed SQL inside one transaction
 → drop staging. This module reproduces that design for Spark:
 
-- **Executors write staging in parallel** (``df.write.jdbc`` — partitioned
-  inserts), never the driver; at 100 TB the staging write is the scan.
-- **The driver runs one set-based merge statement** over the staging table
+- **The staging write is the call's one Spark job.** ``PgParallelBackend``
+  tasks COPY their partitions in parallel; ``DbApiBackend`` streams the
+  batch through the driver from a single Arrow collect, one record batch
+  at a time, so driver memory stays bounded regardless of batch size.
+- **One probe query checks the staged batch** before the merge: NULL
+  natural keys reject it (``ValidationError``, target untouched) and
+  repeated fingerprints switch the merge to a deduplicated source.
+- **The driver runs set-based merge statements** over the staging table
   — the database's planner does the join, exactly as PostgreSQL does for
   the reference.
 - Staging names embed a run id (the reference hashes for the same reason:
@@ -15,10 +20,9 @@ insert-missing / update-changed / close-removed SQL inside one transaction
 
 Connectivity is pluggable: ``SparkJdbcBackend`` uses real JDBC on a
 cluster; ``DbApiBackend`` drives any DBAPI connection (tested against
-DuckDB in tests/test_jdbc_sink.py — this container ships no JDBC driver).
-The DBAPI staging write STREAMS the batch through the driver one partition
-at a time (``toLocalIterator``), so driver memory stays bounded regardless
-of staging-batch size; the generated merge SQL is identical either way.
+DuckDB and sqlite3 in tests/test_jdbc_sink.py and PostgreSQL in
+tests/test_pg_live.py — this container ships no JDBC driver). The
+generated merge SQL is identical for every backend.
 """
 
 from __future__ import annotations
@@ -29,6 +33,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+
+class ValidationError(ValueError):
+    """Junk input rejected before the target is touched (reference:
+    assertthat errors)."""
 
 
 # --- merge SQL generation (shared by both backends) ------------------------
@@ -57,15 +66,42 @@ def _ts_literal(ts: str) -> str:
     return ts
 
 
-def _cols(df: DataFrame) -> list[str]:
-    return list(df.columns)
+def sql_probe(staging: str, not_null: Sequence[str], unique: str | None) -> str:
+    """One scan of the staged batch returning two counts: rows with a NULL
+    in any ``not_null`` column, and rows beyond the first per ``unique``
+    value (0 without ``unique``)."""
+    staging = _ident(staging)
+    any_null = " OR ".join(f"{c} IS NULL" for c in _idents(not_null)) or "1 = 0"
+    dups = f"COUNT(*) - COUNT(DISTINCT {_ident(unique)})" if unique else "0"
+    return f"SELECT COALESCE(SUM(CASE WHEN {any_null} THEN 1 ELSE 0 END), 0), {dups} FROM {staging}"
 
 
-def sql_merge_scd1(target: str, staging: str, keys: Sequence[str], columns: Sequence[str]) -> list[str]:
+def _source(staging: str, columns: Sequence[str], dedup_on: str | None) -> str:
+    """The merge's FROM source: the staging relation, or — when the batch
+    repeats a ``dedup_on`` value — one row per value. The winner is the
+    row first in ascending order of the other columns, NULLs last (string
+    order follows the database's collation); ROW_NUMBER() is portable to
+    PostgreSQL, DuckDB and sqlite."""
+    if dedup_on is None:
+        return staging
+    dedup_on = _ident(dedup_on)
+    collist = ", ".join(columns)
+    order = ", ".join(f"{c} IS NULL, {c}" for c in columns if c != dedup_on)
+    return (
+        f"(SELECT {collist} FROM (SELECT {collist}, ROW_NUMBER() OVER "
+        f"(PARTITION BY {dedup_on} ORDER BY {order or dedup_on}) AS n2k_rn "
+        f"FROM {staging}) r WHERE n2k_rn = 1)"
+    )
+
+
+def sql_merge_scd1(
+    target: str, staging: str, keys: Sequence[str], columns: Sequence[str], dedup_on: str | None = None
+) -> list[str]:
     """UPDATE-changed + INSERT-missing (⟨pub⟩ R/store_language.R pattern)."""
     target, staging = _ident(target), _ident(staging)
     keys = _idents(keys)
     columns = _idents(columns)
+    src = _source(staging, columns, dedup_on)
     attrs = [c for c in columns if c not in keys]
     on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
     set_clause = ", ".join(f"{c} = s.{c}" for c in attrs)
@@ -73,41 +109,45 @@ def sql_merge_scd1(target: str, staging: str, keys: Sequence[str], columns: Sequ
     stmts = []
     if attrs:
         stmts.append(
-            f"UPDATE {target} AS t SET {set_clause} FROM {staging} s WHERE {on}"
+            f"UPDATE {target} AS t SET {set_clause} FROM {src} s WHERE {on}"
         )
     stmts.append(
         f"INSERT INTO {target} ({collist}) "
-        f"SELECT {collist} FROM {staging} s "
+        f"SELECT {collist} FROM {src} s "
         f"WHERE NOT EXISTS (SELECT 1 FROM {target} t WHERE {on})"
     )
     return stmts
 
 
 def sql_merge_insert_ignore(
-    target: str, staging: str, keys: Sequence[str], columns: Sequence[str]
+    target: str, staging: str, keys: Sequence[str], columns: Sequence[str], dedup_on: str | None = None
 ) -> list[str]:
     """INSERT-missing only (append-only version chains)."""
     target, staging = _ident(target), _ident(staging)
     on = " AND ".join(f"t.{k} = s.{k}" for k in _idents(keys))
-    collist = ", ".join(_idents(columns))
+    columns = _idents(columns)
+    src = _source(staging, columns, dedup_on)
+    collist = ", ".join(columns)
     return [
         f"INSERT INTO {target} ({collist}) "
-        f"SELECT {collist} FROM {staging} s "
+        f"SELECT {collist} FROM {src} s "
         f"WHERE NOT EXISTS (SELECT 1 FROM {target} t WHERE {on})"
     ]
 
 
 def sql_merge_set_replace(
-    target: str, staging: str, group_cols: Sequence[str], columns: Sequence[str]
+    target: str, staging: str, group_cols: Sequence[str], columns: Sequence[str], dedup_on: str | None = None
 ) -> list[str]:
     """Replace membership wholesale for groups present in staging
     (⟨pub⟩ R/store_location_group_location.R pattern)."""
     target, staging = _ident(target), _ident(staging)
     on = " AND ".join(f"t.{g} = s.{g}" for g in _idents(group_cols))
-    collist = ", ".join(_idents(columns))
+    columns = _idents(columns)
+    src = _source(staging, columns, dedup_on)
+    collist = ", ".join(columns)
     return [
         f"DELETE FROM {target} AS t WHERE EXISTS (SELECT 1 FROM {staging} s WHERE {on})",
-        f"INSERT INTO {target} ({collist}) SELECT {collist} FROM {staging}",
+        f"INSERT INTO {target} ({collist}) SELECT {collist} FROM {src} s",
     ]
 
 
@@ -226,14 +266,49 @@ def _paramstyle_marker(con) -> str:
     return {"qmark": "?", "format": "%s", "pyformat": "%s"}.get(style, "?")
 
 
+def _arrow_rows(df: DataFrame):
+    """Yield ``df``'s rows as tuples from ONE Spark job: the Arrow collect
+    behind ``DataFrame.toArrow()``, consumed one record batch at a time, so
+    the driver holds a batch, not the frame. Values are what
+    ``toLocalIterator`` yields, with NaN as NULL and a decimal as its
+    string form (sqlite3 cannot bind ``Decimal``; every engine casts the
+    string exactly, and COPY writes the same text). Arrow's tz-aware
+    timestamps become naive local time, as ``toLocalIterator`` gives
+    them."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.errors.exceptions.captured import unwrap_spark_exception
+    from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+    from pyspark.util import _load_from_socket
+
+    def values(col: pa.Array) -> list:
+        if pa.types.is_floating(col.type):
+            col = pc.if_else(pc.is_nan(col), pa.scalar(None, col.type), col)
+        elif pa.types.is_decimal(col.type):
+            col = col.cast(pa.string())
+        elif pa.types.is_timestamp(col.type) and col.type.tz is not None:
+            return [v if v is None else v.astimezone().replace(tzinfo=None)
+                    for v in col.to_pylist()]
+        return col.to_pylist()
+
+    port, secret, server = df._jdf.collectAsArrowToPython()
+    # The stream ends with the batches' partition order, which a staging
+    # table has no use for.
+    for batch in _load_from_socket((port, secret), ArrowCollectSerializer()):
+        if isinstance(batch, pa.RecordBatch):
+            yield from zip(*(values(c) for c in batch.columns))
+    with unwrap_spark_exception():
+        server.getResult()
+
+
 class DbApiBackend:
     """Execute the sink against any DBAPI connection (DuckDB, sqlite3,
     psycopg2…).
 
-    The staging write streams partition-at-a-time through the driver on
-    EVERY branch (``toLocalIterator`` — bounded driver memory, fact-scale
-    batches OK); the merge statements are the same SQL the JDBC backend
-    runs. Each driver gets a typed CREATE TABLE generated from
+    The staging write streams the batch through the driver on EVERY
+    branch, from one Spark job (``_arrow_rows`` — bounded driver memory,
+    fact-scale batches OK); the merge statements are the same SQL the JDBC
+    backend runs. Each driver gets a typed CREATE TABLE generated from
     ``df.schema`` and either bulk COPY (``copy_from_csv`` when the
     connection offers it — PostgreSQL via the psql shim) or a cursor
     ``executemany`` fed the same row iterator (PEP 249 puts execute on
@@ -253,28 +328,13 @@ class DbApiBackend:
         return self.con if hasattr(self.con, "execute") else self.con.cursor()
 
     def write_staging(self, df: DataFrame, staging: str) -> None:
-        # Every backend takes the streamed path. DuckDB used to get a
-        # zero-copy `register` shortcut fed by toPandas() — the one
-        # branch where staging-batch size and driver memory still
-        # coupled (judge r7 nit 1); its prepared-statement executemany
-        # is plenty for a test backend, and production sinks
-        # (PostgreSQL) use COPY anyway.
         staging = _ident(staging)
         coldefs = ", ".join(
             f"{_ident(f.name)} {_sql_type(f.dataType)}" for f in df.schema.fields
         )
         cur = self._cursor()
         cur.execute(f"CREATE TABLE {staging} ({coldefs})")
-        # Stream partition-at-a-time through the driver instead of
-        # materializing the whole batch: toLocalIterator holds at most the
-        # current partition plus one prefetched ahead, so staging-batch size
-        # and driver memory are decoupled — a fact-scale batch transits a
-        # bounded window on its way into COPY. Native Python values (no
-        # pandas round-trip), so only genuine float NaN needs the NULL map.
-        rows = (
-            tuple(None if isinstance(v, float) and v != v else v for v in r)
-            for r in df.toLocalIterator(prefetchPartitions=True)
-        )
+        rows = _arrow_rows(df)
         if hasattr(self.con, "copy_from_csv"):
             # Bulk COPY path (PostgreSQL via the psql shim) — the same
             # wire path the reference's DBI::dbWriteTable staging write
@@ -297,6 +357,13 @@ class DbApiBackend:
             if buf:
                 cur.executemany(sql, buf)
 
+    def fetchone(self, sql: str) -> tuple:
+        """Run one query and return its first row (the staging probe)."""
+        cur = self._cursor()
+        # sqlite3 returns a cursor, duckdb and the psql shim the
+        # connection, psycopg2 None (the cursor holds the result)
+        return tuple((cur.execute(sql) or cur).fetchone())
+
     def execute(self, stmts: Sequence[str]) -> None:
         cur = self._cursor()
         cur.execute("BEGIN TRANSACTION")
@@ -316,8 +383,8 @@ class PgParallelBackend(DbApiBackend):
     """Executor-parallel COPY staging against PostgreSQL — the staging
     write never transits the driver.
 
-    ``DbApiBackend``'s COPY path streams partition-at-a-time through the
-    driver: bounded memory, but one wire. At fact scale the staging write
+    ``DbApiBackend``'s COPY path streams the batch through the driver:
+    bounded memory, but one wire. At fact scale the staging write
     should be the EXECUTORS' job (the reference's dbWriteTable is a single
     client COPY because its client holds the data.frame; a Spark cluster
     holds the batch sharded across executors). Here every task opens its
@@ -333,8 +400,9 @@ class PgParallelBackend(DbApiBackend):
     max_connections=100).
 
     The merge surface is inherited: a single driver connection still runs
-    the set-based merge, exactly as the reference does. ``drop_staging``
-    also sweeps any orphaned per-task tables a crashed run left behind.
+    the set-based merge and the staging probe, exactly as the reference
+    does. ``drop_staging`` also sweeps any orphaned per-task tables a
+    crashed run left behind.
     """
 
     def __init__(
@@ -417,18 +485,21 @@ class PgParallelBackend(DbApiBackend):
     def drop_staging(self, staging: str) -> None:
         staging = _ident(staging)
         cur = self._cursor()
-        # The staging relation is a view over the per-task tables (or still
-        # a bare table if no partition wrote); drop it first, then sweep
-        # every per-task table — including orphans a run that died between
-        # task success and consolidation left behind.
-        cur.execute(f"DROP VIEW IF EXISTS {staging}")
-        cur.execute(f"DROP TABLE IF EXISTS {staging}")
-        parts = self.con.execute(
-            "SELECT tablename FROM pg_tables WHERE tablename LIKE ?",
-            (f"{staging}\\_p%",),
+        # The staging relation is a view over the per-task tables, or still
+        # a bare table if no partition wrote or the write failed before
+        # consolidation (PostgreSQL's DROP VIEW refuses a table). Drop the
+        # view first, then every table: the staging table and each
+        # per-task table — including orphans a run that died between task
+        # success and consolidation left behind.
+        rels = self.con.execute(
+            "SELECT relname, relkind FROM pg_class WHERE relname = ? OR relname LIKE ?",
+            (staging, f"{staging}\\_p%"),
         ).fetchall()
-        for (p,) in parts:
-            cur.execute(f"DROP TABLE IF EXISTS {_ident(p)}")
+        if (staging, "v") in rels:
+            cur.execute(f"DROP VIEW {staging}")
+        for name, kind in rels:
+            if kind == "r":
+                cur.execute(f"DROP TABLE IF EXISTS {_ident(name)}")
 
 
 class SparkJdbcBackend:
@@ -442,12 +513,14 @@ class SparkJdbcBackend:
     def write_staging(self, df: DataFrame, staging: str) -> None:
         df.write.mode("overwrite").jdbc(self.url, staging, properties=self.properties)
 
-    def execute(self, stmts: Sequence[str]) -> None:
-        spark = __import__("pyspark").sql.SparkSession.getActiveSession()
-        jvm = spark._jvm
-        con = jvm.java.sql.DriverManager.getConnection(
+    def _connect(self):
+        jvm = __import__("pyspark").sql.SparkSession.getActiveSession()._jvm
+        return jvm.java.sql.DriverManager.getConnection(
             self.url, self.properties.get("user", ""), self.properties.get("password", "")
         )
+
+    def execute(self, stmts: Sequence[str]) -> None:
+        con = self._connect()
         try:
             con.setAutoCommit(False)
             st = con.createStatement()
@@ -457,6 +530,15 @@ class SparkJdbcBackend:
         except Exception:
             con.rollback()
             raise
+        finally:
+            con.close()
+
+    def fetchone(self, sql: str) -> tuple:
+        con = self._connect()
+        try:
+            rs = con.createStatement().executeQuery(sql)
+            rs.next()
+            return tuple(rs.getObject(i + 1) for i in range(rs.getMetaData().getColumnCount()))
         finally:
             con.close()
 
@@ -473,23 +555,41 @@ def upsert(
     staging_prefix: str = "staging",
     run_id: str | None = None,
     clean: bool = True,
+    not_null: Sequence[str] = (),
+    unique: str | None = None,
     **mode_kwargs,
 ) -> str:
-    """Idempotent upsert of ``df`` into ``target``: stage → merge → clean.
+    """Idempotent upsert of ``df`` into ``target``: stage → probe → merge →
+    clean.
 
-    Returns the staging table name (kept when ``clean=False``, mirroring the
-    reference's ``clean`` argument).
+    The probe is one query over the staged relation (``sql_probe``), run
+    only when ``not_null`` or ``unique`` is given. A NULL in a
+    ``not_null`` column rejects the batch with ``ValidationError`` before
+    the target is touched; a repeated ``unique`` value makes the merge read
+    one row per value (``_source``). A failed call drops its staging
+    relation; a merged one keeps it only with ``clean=False``, mirroring
+    the reference's ``clean`` argument. Returns the staging name.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     staging = f"{staging_prefix}_{target.replace('.', '_')}_{run_id}"
-    backend.write_staging(df, staging)
-    if mode == "scd2_close":
-        stmts = sql_merge_scd2_close(target, staging, keys, **mode_kwargs)
-    elif mode == "scd2_changes":
-        stmts = sql_merge_scd2_changes(target, staging, keys, **mode_kwargs)
-    else:
-        stmts = MERGE_SQL[mode](target, staging, keys, _cols(df))
-    backend.execute(stmts)
+    try:
+        backend.write_staging(df, staging)
+        n_null = n_dup = 0
+        if not_null or unique:
+            n_null, n_dup = map(int, backend.fetchone(sql_probe(staging, not_null, unique)))
+        if n_null:
+            raise ValidationError(f"{target}: {n_null} rows with NULL natural-key values")
+        if mode == "scd2_close":
+            stmts = sql_merge_scd2_close(target, staging, keys, **mode_kwargs)
+        elif mode == "scd2_changes":
+            stmts = sql_merge_scd2_changes(target, staging, keys, **mode_kwargs)
+        else:
+            dedup_on = unique if n_dup else None
+            stmts = MERGE_SQL[mode](target, staging, keys, df.columns, dedup_on=dedup_on)
+        backend.execute(stmts)
+    except Exception:
+        backend.drop_staging(staging)
+        raise
     if clean:
         backend.drop_staging(staging)
     return staging

@@ -302,7 +302,7 @@ class PsqlConnection:
                     self._drain_stderr()
         except Exception:
             # The row SOURCE failed mid-stream (e.g. a Spark task error
-            # inside a streaming toLocalIterator). Terminate the COPY frame
+            # inside the streamed Arrow collect). Terminate the COPY frame
             # and resync the session before re-raising, so the connection
             # stays usable — partial staging is dropped by the caller.
             w.write("\\.\n")
