@@ -1,7 +1,8 @@
 """Generate API.md: the engine's public library surface, one line per
 function — signature + first docstring sentence — grouped by module.
 
-Run: python api_report.py   (writes API.md at the repo root)
+Run: python api_report.py   (writes API.md at the repo root;
+tests/test_api_report.py fails while API.md is stale)
 
 Complements PLANS.md (physical plans of every registered query) and
 SURVEY.md §2 (the operator contract): this is the page a user migrating
@@ -17,7 +18,9 @@ import inspect
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+API_MD = os.path.join(ROOT, "API.md")
+sys.path.insert(0, ROOT)
 
 MODULES = [
     "n2kupdate_spark.api",
@@ -49,7 +52,8 @@ def first_sentence(doc: str | None) -> str:
     return text if len(text) < 200 else text[:197] + "…"
 
 
-def main() -> None:
+def render() -> str:
+    """The text of API.md for the package as currently imported."""
     from n2kupdate_spark.queries import QUERIES
 
     lines = [
@@ -85,9 +89,14 @@ def main() -> None:
         lines.append("")
         lines.extend(rows)
         lines.append("")
-    with open("API.md", "w") as fh:
-        fh.write("\n".join(lines))
-    print(f"wrote API.md ({len(lines)} lines)")
+    return "\n".join(lines)
+
+
+def main() -> None:
+    text = render()
+    with open(API_MD, "w") as fh:
+        fh.write(text)
+    print(f"wrote API.md ({len(text.splitlines())} lines)")
 
 
 if __name__ == "__main__":

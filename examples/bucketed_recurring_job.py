@@ -1,7 +1,7 @@
 """Worked example: pinning a bucketed layout for a recurring fact⋈fact job.
 
 The single biggest shuffle lever this engine has measured
-(probe_q18_10x.py, BASELINE.md §5): bucketing both fact tables on their
+(BASELINE.md §5): bucketing both fact tables on their
 join key removes EVERY hash exchange from agg→HAVING→join pipelines —
 28% faster even in local mode, where a shuffle never crosses a network;
 at 1000 executors the removed all-to-all transfer is the job.

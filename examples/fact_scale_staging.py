@@ -10,8 +10,8 @@ three staging transports with the same merge semantics:
    driver memory: one Arrow record batch at a time from a single Spark
    job; ~120 k rows/s for four lineitem columns on a 4-vCPU host).
 3. ``PgParallelBackend`` — executor-parallel COPY: one psql session per
-   partition into private per-task tables, atomically published as a
-   UNION ALL view; task retries replace their own table (exactly-once).
+   partition into a private per-task table that inherits the staging
+   table; task retries replace their own table (exactly-once).
    Measured 210 k rows/s at 8-way on the 600 k-row lineitem, and on a
    real cluster the driver leaves the data path entirely.
 

@@ -18,9 +18,10 @@ behind a pluggable backend. Run it:
                                                      # (starts a throwaway server;
                                                      # needs PG binaries + postgres user)
 
-At cluster scale the same code runs with `SparkJdbcBackend(url, props)` —
-executors bulk-write the staging tables over JDBC and only the merge
-statement runs on a driver connection (sources/jdbc.py)."""
+At fact scale the same code runs with `PgParallelBackend(host, port)` —
+every task COPYs its partition into the staging table over its own
+PostgreSQL session and only the merge statements run on a driver
+connection (sources/jdbc.py)."""
 
 from __future__ import annotations
 

@@ -4,8 +4,8 @@ Every function follows the reference's one template (⟨pub⟩ every
 R/store_*.R [H], SURVEY.md §3.1): **validate → normalize → fingerprint →
 stage → server-side merge → return input + fingerprints**. Here the merge
 runs through ``sources/jdbc.py`` (staging table + set-based SQL, exactly the
-reference's design) against any backend — DuckDB in tests, a JDBC-reachable
-warehouse on a cluster.
+reference's design) against any backend — DuckDB and sqlite3 in tests,
+PostgreSQL through ``DbApiBackend`` or ``PgParallelBackend``.
 
 A user of ``n2kupdate`` maps 1:1:
 
@@ -162,8 +162,8 @@ class N2kStore:
 
     ``backend`` is any object with the sources/jdbc.py backend protocol
     (``write_staging`` / ``fetchone`` / ``execute`` / ``drop_staging``) —
-    DbApiBackend (DuckDB, sqlite3, PostgreSQL), PgParallelBackend or
-    SparkJdbcBackend.
+    DbApiBackend (DuckDB, sqlite3, PostgreSQL) or PgParallelBackend
+    (PostgreSQL, staged by COPY from the Spark tasks).
     """
 
     backend: object
@@ -174,7 +174,7 @@ class N2kStore:
     def _target(self, table: str) -> str:
         return f"{self.schema}.{table}" if self.schema else table
 
-    def _store(self, df: DataFrame, spec: TableSpec, **merge_kwargs) -> DataFrame:
+    def _store(self, df: DataFrame, spec: TableSpec, batch_ts: str | None = None) -> DataFrame:
         """validate → fingerprint → ``upsert``, whose staging write is the
         call's one Spark job and whose probe rejects NULL natural keys."""
         frame = validate_frame(df, spec)
@@ -193,7 +193,7 @@ class N2kStore:
             clean=self.clean,
             not_null=list(spec.natural_key),
             unique=unique,
-            **merge_kwargs,
+            batch_ts=batch_ts,
         )
         return frame if unique is None else _first_per_fingerprint(frame, spec)
 
@@ -306,7 +306,7 @@ class N2kStore:
         (VARCHAR, NULL = open). Validated like every other call: the
         columns are exactly ``keys + compare_cols``, keys non-NULL."""
         spec = TableSpec(table, tuple(keys), tuple(compare_cols), mode="scd2_changes")
-        return self._store(df, spec, compare_cols=compare_cols, batch_ts=batch_ts)
+        return self._store(df, spec, batch_ts=batch_ts)
 
     def store_analysis(self, analysis: DataFrame, versions: DataFrame | None = None) -> DataFrame:
         """⟨pub⟩ R/store_analysis.R: append-only version chain in FK order —

@@ -61,13 +61,12 @@ def materialize(df: DataFrame, mode: str = "local") -> DataFrame:
     preemptible clusters. Same frames, bit-identical results; only the
     storage/recovery contract differs.
 
-    Plan-audit note: the audit tooling (plans_report.py, the measure
-    probe) captures the PRE-checkpoint plan of every eager
-    materialization by wrapping DataFrame.localCheckpoint/checkpoint
-    around the query build (plans.capture_pre_ckpt_plans), so
-    checkpointed pipelines stop reading as `Scan ExistingRDD` in
-    PLANS.md (r16 verdict: the audit under-reported every eager
-    builder). Nothing here records anything on the normal path."""
+    Plan-audit note: the audit tooling (plans_report.py) captures the
+    PRE-checkpoint plan of every eager materialization by wrapping
+    DataFrame.localCheckpoint/checkpoint around the query build
+    (plans.capture_pre_ckpt_plans), so checkpointed pipelines stop
+    reading as `Scan ExistingRDD` in PLANS.md (r16 verdict: the audit
+    under-reported every eager builder). Nothing here records anything on the normal path."""
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:

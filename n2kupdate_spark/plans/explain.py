@@ -36,9 +36,9 @@ _PRE_CKPT_CAPTURE: list[str] | None = None
 def capture_pre_ckpt_plans():
     """Collect the formatted pre-truncation plan of every eager
     materialization performed while the context is active (audit-only
-    tooling — plans_report.py and the measure probes). Yields the list,
-    filled in materialization order. Reentrant: an inner capture
-    shadows, then restores, the outer one."""
+    tooling — plans_report.py). Yields the list, filled in
+    materialization order. Reentrant: an inner capture shadows, then
+    restores, the outer one."""
     global _PRE_CKPT_CAPTURE
     prev_cap = _PRE_CKPT_CAPTURE
     _PRE_CKPT_CAPTURE = captured = []
@@ -73,9 +73,9 @@ def capture_pre_ckpt_plans():
                 pass
 
     def _make_patched(orig):
-        def patched(self, eager=True):
+        def patched(self, *args, **kwargs):
             _record(self)
-            return orig(self, eager=eager)
+            return orig(self, *args, **kwargs)
 
         patched._n2k_capture_patch = True
         return patched

@@ -310,8 +310,7 @@ def dedup_semantic_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the pin test requires exact kept/dropped equality at fixture
     scale. Same deterministic fits (seeded centroids + sub-codebooks,
     id tiebreaks). operators/similarity.py::semantic_dedup(codes=True)
-    has the full scale story; probe_semantic_pq_10x.py records the
-    wall/memory trade."""
+    has the full scale story and the wall/memory trade."""
     from n2kupdate_spark.operators.similarity import semantic_dedup
 
     e = load(spark, sf_dir, "embeddings").select(

@@ -133,7 +133,7 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side via sequence(). Tiebreaks (is_grid, event_id) make the
     carried value deterministic when events share a timestamp.
 
-    Grid-growth contract (probe_ts_grid.py, BASELINE.md §5): output rows =
+    Grid-growth contract (BASELINE.md §5): output rows =
     Σ_per_key (span/step + 1) — bounded by TIME SPAN, not input size. A
     single corrupt epoch-0 timestamp widens one key's span to ~56 years ≈
     490k hourly rows (measured +473k on sf0.1 from ONE bad row). A 100 TB
@@ -349,7 +349,7 @@ def ts_gap_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     head. All arithmetic is double-precision in both engines, rounded 4dp.
 
     Grid-growth contract: same span-not-size output bound as
-    ts_resample_ffill (see its docstring / probe_ts_grid.py) — clamp spans
+    ts_resample_ffill (see its docstring) — clamp spans
     or validate timestamp domains before gridding at scale."""
     e = load(spark, sf_dir, "events", columns=["user_id", "event_id", "value", "ts"]).select(
         "user_id",

@@ -149,7 +149,7 @@ def validate_schema(df: DataFrame, name: str) -> DataFrame:
 #: A LOGICAL PLAN cache, not a data cache: the stored DataFrame is lazy —
 #: every action against it still scans the parquet files — but re-serving
 #: the resolved plan skips per-call schema inference + file resolution,
-#: which measured 80–113 ms per load() (probe_r16_fixed_costs.py) and is
+#: which measured 80–113 ms per load() (OPTIMIZATION_r16.md) and is
 #: paid inside every timed query build (~300 load() calls per bench run).
 #: Keyed by the source files' (mtime, size) so a regenerated fixture gets a
 #: fresh resolution; non-stat-able (non-local) paths are never cached.
@@ -258,7 +258,7 @@ def load(
 
 # --- bucketed layouts (the recurring-job 100 TB lever) ----------------------
 #
-# probe_q18_10x.py measured it: bucketing both fact tables on the order key
+# BASELINE.md §5 records it: bucketing both fact tables on the order key
 # removes EVERY hash exchange from the Q18-shaped agg→HAVING→join pipeline
 # and is 28% faster even in local mode, where a shuffle never crosses a
 # network. At 1000 executors that difference is the job. These helpers make

@@ -18,11 +18,11 @@ insert-missing / update-changed / close-removed SQL inside one transaction
 - Staging names embed a run id (the reference hashes for the same reason:
   concurrent loads can't collide) and are dropped on success.
 
-Connectivity is pluggable: ``SparkJdbcBackend`` uses real JDBC on a
-cluster; ``DbApiBackend`` drives any DBAPI connection (tested against
-DuckDB and sqlite3 in tests/test_jdbc_sink.py and PostgreSQL in
-tests/test_pg_live.py — this container ships no JDBC driver). The
-generated merge SQL is identical for every backend.
+Two backends share that surface: ``DbApiBackend`` drives any PEP 249
+connection (DuckDB and sqlite3 in tests/test_jdbc_sink.py, PostgreSQL
+through the psql shim in tests/test_pg_live.py) and ``PgParallelBackend``
+COPYs each partition into PostgreSQL from its own task. The generated
+merge SQL is identical for every backend.
 """
 
 from __future__ import annotations
@@ -98,25 +98,14 @@ def sql_merge_scd1(
     target: str, staging: str, keys: Sequence[str], columns: Sequence[str], dedup_on: str | None = None
 ) -> list[str]:
     """UPDATE-changed + INSERT-missing (⟨pub⟩ R/store_language.R pattern)."""
-    target, staging = _ident(target), _ident(staging)
-    keys = _idents(keys)
-    columns = _idents(columns)
-    src = _source(staging, columns, dedup_on)
+    insert = sql_merge_insert_ignore(target, staging, keys, columns, dedup_on)
     attrs = [c for c in columns if c not in keys]
+    if not attrs:
+        return insert
     on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
     set_clause = ", ".join(f"{c} = s.{c}" for c in attrs)
-    collist = ", ".join(columns)
-    stmts = []
-    if attrs:
-        stmts.append(
-            f"UPDATE {target} AS t SET {set_clause} FROM {src} s WHERE {on}"
-        )
-    stmts.append(
-        f"INSERT INTO {target} ({collist}) "
-        f"SELECT {collist} FROM {src} s "
-        f"WHERE NOT EXISTS (SELECT 1 FROM {target} t WHERE {on})"
-    )
-    return stmts
+    src = _source(staging, columns, dedup_on)
+    return [f"UPDATE {target} AS t SET {set_clause} FROM {src} s WHERE {on}", *insert]
 
 
 def sql_merge_insert_ignore(
@@ -151,40 +140,12 @@ def sql_merge_set_replace(
     ]
 
 
-def sql_merge_scd2_close(
-    target: str,
-    staging: str,
-    keys: Sequence[str],
-    batch_ts: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-) -> list[str]:
-    """Close open rows absent from staging; open rows new to the target."""
-    target, staging = _ident(target), _ident(staging)
-    batch_ts = _ts_literal(batch_ts)
-    valid_from, valid_to = _ident(valid_from), _ident(valid_to)
-    ks = _idents(keys)
-    on = " AND ".join(f"t.{k} = s.{k}" for k in ks)
-    keylist = ", ".join(ks)
-    return [
-        f"UPDATE {target} AS t SET {valid_to} = '{batch_ts}' "
-        f"WHERE t.{valid_to} IS NULL "
-        f"AND NOT EXISTS (SELECT 1 FROM {staging} s WHERE {on})",
-        f"INSERT INTO {target} ({keylist}, {valid_from}, {valid_to}) "
-        f"SELECT {keylist}, '{batch_ts}', NULL FROM {staging} s "
-        f"WHERE NOT EXISTS (SELECT 1 FROM {target} t "
-        f"WHERE {on} AND t.{valid_to} IS NULL)",
-    ]
-
-
 def sql_merge_scd2_changes(
     target: str,
     staging: str,
     keys: Sequence[str],
     compare_cols: Sequence[str],
     batch_ts: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> list[str]:
     """Server-side twin of operators.merge.merge_scd2_changes (full classic
     SCD2): close open rows absent from staging, close-and-reopen open rows
@@ -193,10 +154,10 @@ def sql_merge_scd2_changes(
     NULL)) form — `IS NOT DISTINCT FROM` predates sqlite 3.39 and the
     expansion runs identically on DuckDB/PostgreSQL/sqlite. Statement order
     is load-bearing: the changed rows must be closed before the insert's
-    "no open row for this key" predicate runs."""
+    "no open row for this key" predicate runs. The target carries the
+    validity window as ``valid_from``/``valid_to`` (NULL = open)."""
     target, staging = _ident(target), _ident(staging)
     batch_ts = _ts_literal(batch_ts)
-    valid_from, valid_to = _ident(valid_from), _ident(valid_to)
     ks = _idents(keys)
     cs = _idents(compare_cols)
     on = " AND ".join(f"t.{k} = s.{k}" for k in ks)
@@ -207,18 +168,18 @@ def sql_merge_scd2_changes(
     collist = ", ".join(cs)
     return [
         # 1. close open rows whose key is absent from the batch
-        f"UPDATE {target} AS t SET {valid_to} = '{batch_ts}' "
-        f"WHERE t.{valid_to} IS NULL "
+        f"UPDATE {target} AS t SET valid_to = '{batch_ts}' "
+        "WHERE t.valid_to IS NULL "
         f"AND NOT EXISTS (SELECT 1 FROM {staging} s WHERE {on})",
         # 2. close open rows whose compared attributes changed
-        f"UPDATE {target} AS t SET {valid_to} = '{batch_ts}' "
-        f"FROM {staging} s WHERE t.{valid_to} IS NULL AND {on} AND NOT ({same})",
+        f"UPDATE {target} AS t SET valid_to = '{batch_ts}' "
+        f"FROM {staging} s WHERE t.valid_to IS NULL AND {on} AND NOT ({same})",
         # 3. open a row for every staging key with no surviving open row
         #    (covers both changed keys — just closed — and brand-new keys)
-        f"INSERT INTO {target} ({keylist}, {collist}, {valid_from}, {valid_to}) "
+        f"INSERT INTO {target} ({keylist}, {collist}, valid_from, valid_to) "
         f"SELECT {keylist}, {collist}, '{batch_ts}', NULL FROM {staging} s "
         f"WHERE NOT EXISTS (SELECT 1 FROM {target} t "
-        f"WHERE {on} AND t.{valid_to} IS NULL)",
+        f"WHERE {on} AND t.valid_to IS NULL)",
     ]
 
 
@@ -307,7 +268,7 @@ class DbApiBackend:
 
     The staging write streams the batch through the driver on EVERY
     branch, from one Spark job (``_arrow_rows`` — bounded driver memory,
-    fact-scale batches OK); the merge statements are the same SQL the JDBC
+    fact-scale batches OK); the merge statements are the same SQL every
     backend runs. Each driver gets a typed CREATE TABLE generated from
     ``df.schema`` and either bulk COPY (``copy_from_csv`` when the
     connection offers it — PostgreSQL via the psql shim) or a cursor
@@ -327,21 +288,25 @@ class DbApiBackend:
         # strict drivers (psycopg2) only expose execute on cursors.
         return self.con if hasattr(self.con, "execute") else self.con.cursor()
 
-    def write_staging(self, df: DataFrame, staging: str) -> None:
-        staging = _ident(staging)
+    def _create_staging(self, df: DataFrame, staging: str) -> None:
+        """The staging table, typed from ``df.schema``."""
         coldefs = ", ".join(
             f"{_ident(f.name)} {_sql_type(f.dataType)}" for f in df.schema.fields
         )
-        cur = self._cursor()
-        cur.execute(f"CREATE TABLE {staging} ({coldefs})")
+        self._cursor().execute(f"CREATE TABLE {staging} ({coldefs})")
+
+    def write_staging(self, df: DataFrame, staging: str) -> None:
+        staging = _ident(staging)
+        self._create_staging(df, staging)
         rows = _arrow_rows(df)
         if hasattr(self.con, "copy_from_csv"):
             # Bulk COPY path (PostgreSQL via the psql shim) — the same
             # wire path the reference's DBI::dbWriteTable staging write
-            # uses; one roundtrip, server-side CSV parse, and the row
-            # iterator is consumed incrementally.
+            # uses; one roundtrip, server-side text-format parse, and the
+            # row iterator is consumed incrementally.
             self.con.copy_from_csv(staging, _idents(df.columns), rows)
         else:
+            cur = self._cursor()
             cols = ", ".join(_idents(df.columns))
             ph = ", ".join([_paramstyle_marker(self.con)] * len(df.columns))
             sql = f"INSERT INTO {staging} ({cols}) VALUES ({ph})"
@@ -387,22 +352,19 @@ class PgParallelBackend(DbApiBackend):
     bounded memory, but one wire. At fact scale the staging write
     should be the EXECUTORS' job (the reference's dbWriteTable is a single
     client COPY because its client holds the data.frame; a Spark cluster
-    holds the batch sharded across executors). Here every task opens its
-    own psql session and COPYs its partition into a private per-task table,
-    then the driver atomically publishes a UNION ALL view over them as the
-    staging relation (zero server-side re-copy; the merge SQL only ever
-    reads staging). Task retries are exactly-once: a task DROPs and
-    recreates its private table before COPYing, so a re-run partition
-    replaces — never duplicates — its rows, and the view sees exactly one
-    table per surviving partition. ``max_parallel`` reshapes the batch
-    (coalesce down / round-robin repartition up) to bound-and-fill the
-    concurrent server connections (PostgreSQL defaults to
-    max_connections=100).
+    holds the batch sharded across executors). Here the driver creates the
+    staging table, and every task opens its own psql session and COPYs its
+    partition into a private child table that INHERITS it, so a SELECT on
+    the staging table reads every task's rows and no row is copied twice.
+    Task retries are exactly-once: a task DROPs and recreates its child
+    before COPYing, so a re-run partition replaces — never duplicates — its
+    rows. ``max_parallel`` reshapes the batch (coalesce down / round-robin
+    repartition up) to bound-and-fill the concurrent server connections
+    (PostgreSQL defaults to max_connections=100).
 
     The merge surface is inherited: a single driver connection still runs
     the set-based merge and the staging probe, exactly as the reference
-    does. ``drop_staging`` also sweeps any orphaned per-task tables a
-    crashed run left behind.
+    does. ``drop_staging`` drops the staging table with its children.
     """
 
     def __init__(
@@ -423,37 +385,30 @@ class PgParallelBackend(DbApiBackend):
 
     def write_staging(self, df: DataFrame, staging: str) -> None:
         staging = _ident(staging)
-        coldefs = ", ".join(
-            f"{_ident(f.name)} {_sql_type(f.dataType)}" for f in df.schema.fields
-        )
         cols = _idents(df.columns)
-        collist = ", ".join(cols)
         kwargs = self._conn_kwargs
-        self._cursor().execute(f"CREATE TABLE {staging} ({coldefs})")
+        self._create_staging(df, staging)
 
         def copy_part(idx: int, it):
-            # Runs on the executor: private session, private table. Empty
-            # partitions return without opening a connection.
+            # Runs on the executor: private session, private child table.
+            # Empty partitions return without opening a connection. COPY
+            # writes NaN as NULL, as every other staging path does.
             import itertools
 
             from n2kupdate_spark.sources.pg_psql import PsqlConnection
 
-            rows = (
-                tuple(None if isinstance(v, float) and v != v else v for v in r)
-                for r in it
-            )
-            first = next(rows, None)
+            first = next(it, None)
             if first is None:
                 return iter(())
             part = f"{staging}_p{idx}"
             con = PsqlConnection(**kwargs)
             try:
                 con.execute(f"DROP TABLE IF EXISTS {part}")
-                con.execute(f"CREATE TABLE {part} ({coldefs})")
-                con.copy_from_csv(part, cols, itertools.chain([first], rows))
+                con.execute(f"CREATE TABLE {part} () INHERITS ({staging})")
+                con.copy_from_csv(part, cols, itertools.chain([first], it))
             finally:
                 con.close()
-            return iter([idx])
+            return iter(())
 
         n = df.rdd.getNumPartitions()
         if n > self.max_parallel:
@@ -465,85 +420,10 @@ class PgParallelBackend(DbApiBackend):
             shaped = df.repartition(self.max_parallel)
         else:
             shaped = df
-        written = sorted(shaped.rdd.mapPartitionsWithIndex(copy_part).collect())
-        # Consolidate as a UNION ALL view, atomically: the staging "table"
-        # becomes visible fully loaded or not at all (a failed task above
-        # fails the job before this point), and NO row is copied a second
-        # time — the merge SQL only ever SELECTs/EXISTS-probes the staging
-        # relation, which PostgreSQL planning handles identically over the
-        # view. (An INSERT..SELECT consolidation measured ~40% of the whole
-        # staging wall re-copying rows server-side.)
-        union = " UNION ALL ".join(
-            f"SELECT {collist} FROM {staging}_p{i}" for i in written
-        )
-        self.execute(
-            [f"DROP TABLE {staging}", f"CREATE VIEW {staging} AS {union}"]
-            if written
-            else []
-        )
+        shaped.rdd.mapPartitionsWithIndex(copy_part).collect()
 
     def drop_staging(self, staging: str) -> None:
-        staging = _ident(staging)
-        cur = self._cursor()
-        # The staging relation is a view over the per-task tables, or still
-        # a bare table if no partition wrote or the write failed before
-        # consolidation (PostgreSQL's DROP VIEW refuses a table). Drop the
-        # view first, then every table: the staging table and each
-        # per-task table — including orphans a run that died between task
-        # success and consolidation left behind.
-        rels = self.con.execute(
-            "SELECT relname, relkind FROM pg_class WHERE relname = ? OR relname LIKE ?",
-            (staging, f"{staging}\\_p%"),
-        ).fetchall()
-        if (staging, "v") in rels:
-            cur.execute(f"DROP VIEW {staging}")
-        for name, kind in rels:
-            if kind == "r":
-                cur.execute(f"DROP TABLE IF EXISTS {_ident(name)}")
-
-
-class SparkJdbcBackend:
-    """Cluster path: executors write staging via JDBC partitioned inserts;
-    the driver runs the merge over a JVM DriverManager connection."""
-
-    def __init__(self, url: str, properties: dict[str, str] | None = None):
-        self.url = url
-        self.properties = properties or {}
-
-    def write_staging(self, df: DataFrame, staging: str) -> None:
-        df.write.mode("overwrite").jdbc(self.url, staging, properties=self.properties)
-
-    def _connect(self):
-        jvm = __import__("pyspark").sql.SparkSession.getActiveSession()._jvm
-        return jvm.java.sql.DriverManager.getConnection(
-            self.url, self.properties.get("user", ""), self.properties.get("password", "")
-        )
-
-    def execute(self, stmts: Sequence[str]) -> None:
-        con = self._connect()
-        try:
-            con.setAutoCommit(False)
-            st = con.createStatement()
-            for s in stmts:
-                st.execute(s)
-            con.commit()
-        except Exception:
-            con.rollback()
-            raise
-        finally:
-            con.close()
-
-    def fetchone(self, sql: str) -> tuple:
-        con = self._connect()
-        try:
-            rs = con.createStatement().executeQuery(sql)
-            rs.next()
-            return tuple(rs.getObject(i + 1) for i in range(rs.getMetaData().getColumnCount()))
-        finally:
-            con.close()
-
-    def drop_staging(self, staging: str) -> None:
-        self.execute([f"DROP TABLE IF EXISTS {staging}"])
+        self._cursor().execute(f"DROP TABLE IF EXISTS {_ident(staging)} CASCADE")
 
 
 def upsert(
@@ -552,26 +432,28 @@ def upsert(
     keys: Sequence[str],
     backend,
     mode: str = "scd1",
-    staging_prefix: str = "staging",
     run_id: str | None = None,
     clean: bool = True,
     not_null: Sequence[str] = (),
     unique: str | None = None,
-    **mode_kwargs,
+    batch_ts: str | None = None,
 ) -> str:
     """Idempotent upsert of ``df`` into ``target``: stage → probe → merge →
     clean.
 
-    The probe is one query over the staged relation (``sql_probe``), run
-    only when ``not_null`` or ``unique`` is given. A NULL in a
-    ``not_null`` column rejects the batch with ``ValidationError`` before
-    the target is touched; a repeated ``unique`` value makes the merge read
-    one row per value (``_source``). A failed call drops its staging
-    relation; a merged one keeps it only with ``clean=False``, mirroring
-    the reference's ``clean`` argument. Returns the staging name.
+    ``mode`` is a ``MERGE_SQL`` key, or ``scd2_changes``: the versioned
+    merge at ``batch_ts``, comparing every column of ``df`` outside
+    ``keys``. The probe is one query over the staged relation
+    (``sql_probe``), run only when ``not_null`` or ``unique`` is given. A
+    NULL in a ``not_null`` column rejects the batch with
+    ``ValidationError`` before the target is touched; a repeated
+    ``unique`` value makes the merge read one row per value (``_source``).
+    A failed call drops its staging relation; a merged one keeps it only
+    with ``clean=False``, mirroring the reference's ``clean`` argument.
+    Returns the staging name.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    staging = f"{staging_prefix}_{target.replace('.', '_')}_{run_id}"
+    staging = f"staging_{target.replace('.', '_')}_{run_id}"
     try:
         backend.write_staging(df, staging)
         n_null = n_dup = 0
@@ -579,10 +461,9 @@ def upsert(
             n_null, n_dup = map(int, backend.fetchone(sql_probe(staging, not_null, unique)))
         if n_null:
             raise ValidationError(f"{target}: {n_null} rows with NULL natural-key values")
-        if mode == "scd2_close":
-            stmts = sql_merge_scd2_close(target, staging, keys, **mode_kwargs)
-        elif mode == "scd2_changes":
-            stmts = sql_merge_scd2_changes(target, staging, keys, **mode_kwargs)
+        if mode == "scd2_changes":
+            compare = [c for c in df.columns if c not in keys]
+            stmts = sql_merge_scd2_changes(target, staging, keys, compare, batch_ts)
         else:
             dedup_on = unique if n_dup else None
             stmts = MERGE_SQL[mode](target, staging, keys, df.columns, dedup_on=dedup_on)

@@ -9,7 +9,7 @@ is the streaming runtime wiring, smoke-tested in tests/test_streaming.py.
 
 Scale notes: state stores (dedup, windows) are bounded by the watermark —
 without it, state grows with the key space forever (measured plateau:
-probe_state_growth.py / test_state_store_plateaus_at_watermark_horizon).
+test_state_store_plateaus_at_watermark_horizon).
 When the horizon itself holds billions of keys, switch the provider to
 RocksDB (``spark.sql.streaming.stateStore.providerClass`` →
 ``...state.RocksDBStateStoreProvider``): state moves to native memory +

@@ -170,7 +170,7 @@ def test_sqlite3_sink_idempotent(spark, sf_dir, sqlite_db):
 def test_merge_sql_rejects_hostile_identifiers():
     from n2kupdate_spark.sources.jdbc import (
         sql_merge_scd1,
-        sql_merge_scd2_close,
+        sql_merge_scd2_changes,
     )
 
     with pytest.raises(ValueError):
@@ -178,9 +178,9 @@ def test_merge_sql_rejects_hostile_identifiers():
     with pytest.raises(ValueError):
         sql_merge_scd1("t", "s", ["k"], ["a; --", "k"])
     with pytest.raises(ValueError):
-        sql_merge_scd2_close("t", "s", ["k"], batch_ts="2024-01-01' OR '1'='1")
+        sql_merge_scd2_changes("t", "s", ["k"], ["a"], batch_ts="2024-01-01' OR '1'='1")
     # well-formed inputs still pass
-    assert sql_merge_scd2_close("t", "s", ["k"], batch_ts="2024-01-01 00:00:00")
+    assert sql_merge_scd2_changes("t", "s", ["k"], ["a"], batch_ts="2024-01-01 00:00:00")
 
 
 # --- scd2_changes: server-side SQL vs pure transform ----------------------
@@ -255,7 +255,6 @@ def test_scd2_changes_sink_matches_pure_transform(spark, sf_dir, engine):
     incoming = FXQ.dim_incoming_partial(spark, sf_dir)
     upsert(
         incoming, "dim_t", ["c_custkey"], DbApiBackend(con), mode="scd2_changes",
-        compare_cols=["c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
         batch_ts=FXQ.BATCH_TS,
     )
     got = sorted(

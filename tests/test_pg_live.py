@@ -162,7 +162,6 @@ def test_pg_scd2_changes_sink_matches_pure_transform(spark, sf_dir, pg):
         incoming = FXQ.dim_incoming_partial(spark, sf_dir)
         upsert(
             incoming, "dim_t", ["c_custkey"], DbApiBackend(pg), mode="scd2_changes",
-            compare_cols=["c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
             batch_ts=FXQ.BATCH_TS,
         )
         expected = merge_scd2_changes(
@@ -361,7 +360,8 @@ def test_pg_multiline_text_roundtrip_through_upsert(spark, pg):
     merge → read back) — the correctness boundary the judge flagged on the
     pre-COPY shim (VERDICT r5 "What's wrong" #1). Values cover LF, CRLF,
     leading/trailing newlines, a lone \\. line (the COPY end-of-data marker),
-    and csv-delimiter + quote mixtures."""
+    csv-delimiter + quote mixtures, and the values \\. and \\N (COPY's
+    NULL marker)."""
     from n2kupdate_spark.operators import merge_scd1
 
     texts = [
@@ -372,6 +372,8 @@ def test_pg_multiline_text_roundtrip_through_upsert(spark, pg):
         (5, 'quotes "and", commas\nacross, lines'),
         (6, None),
         (7, ""),
+        (8, "\\."),
+        (9, "\\N"),
     ]
     schema = "doc_id bigint, body string"
     pg.execute("CREATE TABLE notes_t (doc_id BIGINT, body VARCHAR)")
@@ -546,11 +548,11 @@ def test_pg_rollback_on_failed_merge(spark, sf_dir, pg):
 
 def test_pg_parallel_copy_staging_fact_scale(spark, pg_server, pg):
     """Executor-parallel COPY staging (PgParallelBackend): every task COPYs
-    its partition over its own psql session into a private per-task table;
-    the driver atomically publishes a UNION ALL view over them. Staging
-    the sf0.1 lineitem fact (600 k rows) must load exactly the batch —
-    count and a value checksum pinned against the Spark-side aggregate —
-    and drop_staging must sweep the view AND every per-task table."""
+    its partition over its own psql session into a private per-task table
+    that inherits the staging table. Staging the sf0.1 lineitem fact
+    (600 k rows) must load exactly the batch — count and a value checksum
+    pinned against the Spark-side aggregate — and drop_staging must remove
+    the staging table AND every per-task table."""
     from n2kupdate_spark.sources.jdbc import PgParallelBackend
 
     if not os.path.isdir("/root/testdata/sf0.1"):
@@ -612,8 +614,8 @@ def test_pg_parallel_copy_task_retry_replaces_partition(spark, pg_server, pg):
 def test_pg_parallel_backend_upsert_end_to_end(spark, sf_dir, pg_server, pg):
     """The full stage→merge→clean lifecycle through the parallel backend
     must produce exactly the state the driver-streamed backend produces
-    (same generated merge SQL, different staging transport), including
-    orphan-sweep on clean."""
+    (same generated merge SQL, different staging transport), and leave no
+    staging table behind."""
     from n2kupdate_spark.sources.jdbc import PgParallelBackend
 
     backend = PgParallelBackend(host=pg_server["host"], port=pg_server["port"])

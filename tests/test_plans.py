@@ -270,8 +270,8 @@ def test_bucketed_q18_shape_has_zero_hash_exchanges(spark, sf_dir):
     hash exchanges — the scan's bucketed distribution satisfies the
     groupBy(l_orderkey) aggregate, and the big⋈orders sort-merge join
     co-locates for free. This is the recurring-job layout for 100 TB
-    fact⋈fact work; probe_q18_10x.py measures it at 10× (0.72× of the
-    plain plan even in local mode, where shuffles don't cross a network)."""
+    fact⋈fact work; BASELINE.md §5 records it at 10× (0.72× of the plain
+    plan even in local mode, where shuffles don't cross a network)."""
     import re
     from n2kupdate_spark.sources import load
     from pyspark.sql import functions as F
@@ -509,3 +509,18 @@ def test_bucketed_merge_family_runs_exchange_free(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         for t in ("n2k_mrg_t1", "n2k_mrg_t2", "n2k_mrg_i"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_pre_ckpt_capture_forwards_checkpoint_arguments(spark):
+    """The capture wrapper passes every argument through to
+    ``localCheckpoint`` (Spark 4.1 takes ``storageLevel`` next to
+    ``eager``) and records the plan once per materialization."""
+    from pyspark import StorageLevel
+
+    from n2kupdate_spark.plans import capture_pre_ckpt_plans
+
+    df = spark.range(10).filter("id % 2 = 0")
+    with capture_pre_ckpt_plans() as captured:
+        out = df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_ONLY)
+    assert len(captured) == 1
+    assert out.count() == 5

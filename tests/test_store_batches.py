@@ -98,12 +98,16 @@ def _lang(spark, rows, partitions: int | None = None):
 
 TYPED_SCHEMA = ("k bigint, s string, f double, ts timestamp, d date, "
                 "dec decimal(10,2), b boolean")
+#: A string holding every character COPY's text format escapes, a literal
+#: ``\N`` (its NULL marker) and a lone ``\.`` line (its end-of-data marker).
+ESCAPES = "tab\there\\back\\slash \\N\r\n\\.\nlast"
 TYPED_ROWS = [
     (1, None, None, None, None, None, None),
     (2, "", float("nan"), dt.datetime(2024, 1, 2, 3, 4, 5, 678901), dt.date(2024, 2, 29),
      decimal.Decimal("-12.30"), True),
     (3, "x", 1.5, dt.datetime(1999, 12, 31, 23, 59, 59), dt.date(1970, 1, 1),
      decimal.Decimal("0.05"), False),
+    (4, ESCAPES, -0.25, None, None, None, None),
 ]
 #: What each engine holds after staging TYPED_ROWS, as its driver returns
 #: it: NULL stays NULL and "" stays "", NaN is staged as NULL, timestamps
@@ -117,25 +121,29 @@ STAGED = {
          decimal.Decimal("-12.30"), True),
         (3, "x", 1.5, dt.datetime(1999, 12, 31, 23, 59, 59), dt.date(1970, 1, 1),
          decimal.Decimal("0.05"), False),
+        (4, ESCAPES, -0.25, None, None, None, None),
     ],
     "sqlite3": [
         (1, None, None, None, None, None, None),
         (2, "", None, "2024-01-02 03:04:05.678901", "2024-02-29", -12.3, 1),
         (3, "x", 1.5, "1999-12-31 23:59:59", "1970-01-01", 0.05, 0),
+        (4, ESCAPES, -0.25, None, None, None, None),
     ],
     "pg": [
         ("1", None, None, None, None, None, None),
         ("2", "", None, "2024-01-02 03:04:05.678901", "2024-02-29", "-12.30", "t"),
         ("3", "x", "1.5", "1999-12-31 23:59:59", "1970-01-01", "0.05", "f"),
+        ("4", ESCAPES, "-0.25", None, None, None, None),
     ],
 }
 STAGED["pg_parallel"] = STAGED["pg"]
 
 
 def test_staging_type_roundtrip(spark, engine):
-    """NULL vs "" vs NaN, a timestamp, a date, a decimal and a boolean
-    through ``write_staging``. The sqlite3 case is also the regression for
-    decimals, which sqlite3 cannot bind as ``Decimal``."""
+    """NULL vs "" vs NaN, a timestamp, a date, a decimal, a boolean and
+    COPY's escape characters through ``write_staging``. The sqlite3 case is
+    also the regression for decimals, which sqlite3 cannot bind as
+    ``Decimal``."""
     df = spark.createDataFrame(TYPED_ROWS, TYPED_SCHEMA)
     engine.backend.write_staging(df, "staging_types")
     try:
@@ -191,8 +199,8 @@ def test_null_keys_rejected_before_write(spark, engine):
 def test_failed_or_empty_staging_leaves_nothing_behind(spark, engine):
     """A task that dies during the staging write fails the call with its
     own error; an empty batch stores nothing. Either way the target is as
-    it was and no staging relation is left (PgParallelBackend's staging is
-    then a bare table, not its usual view)."""
+    it was and no staging relation is left (PgParallelBackend's staging
+    table then has no child table, or only some)."""
     st = N2kStore(engine.backend)
     boom = F.udf(lambda d: d if d != "boom" else str(1 // 0), "string")
     bad = _lang(spark, [("nl", "Dutch"), ("xx", "boom")], partitions=2)

@@ -346,8 +346,8 @@ def test_state_store_plateaus_at_watermark_horizon(spark, tmp_path):
     micro-batches (maxFilesPerTrigger=1 under availableNow), event time
     advancing 45 min per batch, 20 FRESH keys per batch → 240 distinct keys
     total; ``stateOperators[0].numRowsTotal`` read per batch from
-    recentProgress. Expected series (probe_state_growth.py, derivable from
-    the eviction rule wm = max_ts_seen − 1 h applied with one batch of lag):
+    recentProgress. Expected series (derivable from the eviction rule
+    wm = max_ts_seen − 1 h applied with one batch of lag):
 
     - dedup: ramps 20→80 while wm is still behind, then PLATEAUS at 80
       (4 batches × 20 keys = horizon + one-batch eviction lag) for the rest
