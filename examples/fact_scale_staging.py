@@ -1,19 +1,18 @@
-"""Worked example: fact-scale staging into PostgreSQL, three transports.
+"""Worked example: fact-scale staging into PostgreSQL.
 
 The reference stages every ``store_*`` batch through one client-held COPY
-(`DBI::dbWriteTable` — fine when the client holds the data.frame). On a
-Spark cluster the batch is sharded across executors, so the engine offers
-three staging transports with the same merge semantics:
+(`DBI::dbWriteTable`). Here the Spark batch reaches the driver from a
+single Arrow collect, one record batch at a time (bounded driver memory,
+no Python-worker job), and each record batch is encoded to COPY text by
+Arrow compute kernels and streamed into one ``\\copy … FROM STDIN``. Two
+transports share that path and the merge semantics:
 
-1. ``DbApiBackend`` + duckdb/sqlite — dim-sized batches, tests/notebooks.
-2. ``DbApiBackend`` + the psql shim — driver-streamed ``\\copy`` (bounded
-   driver memory: one Arrow record batch at a time from a single Spark
-   job; ~120 k rows/s for four lineitem columns on a 4-vCPU host).
-3. ``PgParallelBackend`` — executor-parallel COPY: one psql session per
-   partition into a private per-task table that inherits the staging
-   table; task retries replace their own table (exactly-once).
-   Measured 210 k rows/s at 8-way on the 600 k-row lineitem, and on a
-   real cluster the driver leaves the data path entirely.
+1. ``DbApiBackend`` + duckdb/sqlite — dim-sized batches, tests/notebooks
+   (rows bound with ``executemany`` instead of COPY).
+2. ``DbApiBackend`` over the psql shim, or ``PgParallelBackend``, which
+   opens that shim itself from connection arguments — COPY staging.
+   Measured ~245 k rows/s stage+merge for the four lineitem columns below
+   (600 k rows) on a 4-vCPU host.
 
 Run:  python examples/fact_scale_staging.py
 (needs PG binaries + a postgres system user; starts a throwaway server)
@@ -71,12 +70,12 @@ def main() -> int:
         )
         n = li.count()
 
-        backend = PgParallelBackend(host=tmp, port=port, max_parallel=8)
+        backend = PgParallelBackend(host=tmp, port=port)
         backend.con.execute(
             "CREATE TABLE lineitem_t (l_orderkey BIGINT, l_linenumber INTEGER, "
             "l_quantity DOUBLE PRECISION, l_extendedprice DOUBLE PRECISION)"
         )
-        # The reference lifecycle, fact-sized: stage (parallel COPY) →
+        # The reference lifecycle, fact-sized: stage (COPY) →
         # server-side merge → clean. Replaying the same batch is a no-op.
         t0 = time.time()
         upsert(li, "lineitem_t", keys=["l_orderkey", "l_linenumber"],

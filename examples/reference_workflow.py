@@ -18,10 +18,10 @@ behind a pluggable backend. Run it:
                                                      # (starts a throwaway server;
                                                      # needs PG binaries + postgres user)
 
-At fact scale the same code runs with `PgParallelBackend(host, port)` —
-every task COPYs its partition into the staging table over its own
-PostgreSQL session and only the merge statements run on a driver
-connection (sources/jdbc.py)."""
+At fact scale the same code runs with `PgParallelBackend(host, port)`,
+which opens its own psql session: the driver COPYs the batch from one
+Arrow collect, record batch by record batch, and runs the merge
+statements on that session (sources/jdbc.py)."""
 
 from __future__ import annotations
 

@@ -401,22 +401,48 @@ def test_pg_multiline_text_roundtrip_through_upsert(spark, pg):
         pg.execute("DROP TABLE IF EXISTS notes_t")
 
 
-def test_pg_copy_failure_raises_and_session_survives(spark, sf_dir, pg):
-    """Both \\copy failure modes must raise PsqlError AND leave the session
-    usable: (a) copy never starts (missing table — caught by the pre-stream
-    probe, before data lines could be misread as SQL); (b) server rejects
+def test_pg_copy_failure_raises_and_session_survives(spark, sf_dir, pg, monkeypatch):
+    """Every \\copy failure mode must raise AND leave the session usable:
+    (a) copy never starts (missing table — caught by the pre-stream probe,
+    before data lines could be misread as SQL); (b) server rejects
     mid-stream (type mismatch — psql consumes through \\. so the wire stays
-    aligned)."""
+    aligned); (c) a batch holds a NUL byte, which COPY text cannot carry —
+    ``copy_arrow`` raises ValueError before any byte of that batch is
+    sent, and the COPY stores none of the batches before it either."""
+    import pyarrow as pa
+
     with pytest.raises(PsqlError):
         pg.copy_from_csv("table_that_does_not_exist", ["a"], [(1,), (2,)])
     assert pg.execute("SELECT 41 + 1").fetchone() == ("42",)
 
-    pg.execute("CREATE TABLE copyfail_t (i INTEGER)")
+    pg.execute("CREATE TABLE copyfail_t (i INTEGER, s VARCHAR)")
     try:
         with pytest.raises(PsqlError):
             pg.copy_from_csv("copyfail_t", ["i"], [(1,), ("not an int",), (3,)])
         assert pg.execute("SELECT 6 * 7").fetchone() == ("42",)
         # rejected COPY is atomic: no partial rows
+        assert pg.execute("SELECT COUNT(*) FROM copyfail_t").fetchone() == ("0",)
+
+        sent = []
+
+        class Tap:  # records the raw bytes the COPY writes to psql
+            def __init__(self, raw):
+                self.raw = raw
+
+            def write(self, data):
+                sent.append(bytes(data))
+                return self.raw.write(data)
+
+        monkeypatch.setattr(pg._p, "stdin", Tap(pg._p.stdin))
+        batches = [
+            pa.record_batch([pa.array([1, 2]), pa.array(["a", "b"])], names=["i", "s"]),
+            pa.record_batch([pa.array([3]), pa.array(["nul\x00byte"])], names=["i", "s"]),
+        ]
+        with pytest.raises(ValueError, match="NUL"):
+            pg.copy_arrow("copyfail_t", ["i", "s"], batches)
+        assert sent[0] == b"1\ta\n2\tb\n"
+        assert not any(b"nul" in d for d in sent)
+        assert pg.execute("SELECT 6 * 7").fetchone() == ("42",)
         assert pg.execute("SELECT COUNT(*) FROM copyfail_t").fetchone() == ("0",)
     finally:
         pg.execute("DROP TABLE IF EXISTS copyfail_t")
@@ -455,8 +481,9 @@ def test_pg_fact_scale_staging_bounded_memory(spark, pg):
     table size — the judge's r6 top item: ``write_staging`` used to
     ``toPandas()`` the whole batch (371 MiB measured for this table counting
     the row-tuple copy), coupling staging size to driver memory. The streamed
-    path (toLocalIterator → \\copy) holds only a partition window, so the
-    same code survives a fact-scale batch on a real cluster driver."""
+    path (Arrow collect → one record batch of at most ``maxRecordsPerBatch``
+    rows encoded at a time → \\copy) holds one batch and its COPY text, so
+    the same code survives a fact-scale batch on a real cluster driver."""
     if not os.path.isdir("/root/testdata/sf0.1"):
         pytest.skip("sf0.1 fixtures not present")
     li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
@@ -509,9 +536,12 @@ def test_pg_executemany_multichunk_is_atomic(pg):
 
 
 def test_pg_copy_survives_failing_row_source(pg):
-    """If the row ITERATOR feeding \\copy raises mid-stream (the streamed
-    staging path surfaces Spark task failures this way), copy_from_csv must
-    terminate the COPY frame, resync, and leave the session usable."""
+    """If the row or batch ITERATOR feeding \\copy raises mid-stream (the
+    streamed staging path surfaces Spark task failures this way),
+    copy_from_csv and copy_arrow must terminate the COPY frame, resync,
+    leave the session usable, and store none of the rows sent before."""
+    import pyarrow as pa
+
     pg.execute("CREATE TABLE gen_fail_t (i INTEGER)")
 
     def rows():
@@ -519,10 +549,18 @@ def test_pg_copy_survives_failing_row_source(pg):
         yield (2,)
         raise RuntimeError("source exploded mid-stream")
 
+    def batches():
+        yield pa.record_batch([pa.array([1, 2])], names=["i"])
+        raise RuntimeError("source exploded mid-stream")
+
     try:
         with pytest.raises(RuntimeError, match="mid-stream"):
             pg.copy_from_csv("gen_fail_t", ["i"], rows())
         assert pg.execute("SELECT 6 * 7").fetchone() == ("42",)
+        with pytest.raises(RuntimeError, match="mid-stream"):
+            pg.copy_arrow("gen_fail_t", ["i"], batches())
+        assert pg.execute("SELECT 6 * 7").fetchone() == ("42",)
+        assert pg.execute("SELECT COUNT(*) FROM gen_fail_t").fetchone() == ("0",)
     finally:
         pg.execute("DROP TABLE IF EXISTS gen_fail_t")
 
@@ -547,12 +585,12 @@ def test_pg_rollback_on_failed_merge(spark, sf_dir, pg):
 
 
 def test_pg_parallel_copy_staging_fact_scale(spark, pg_server, pg):
-    """Executor-parallel COPY staging (PgParallelBackend): every task COPYs
-    its partition over its own psql session into a private per-task table
-    that inherits the staging table. Staging the sf0.1 lineitem fact
-    (600 k rows) must load exactly the batch — count and a value checksum
-    pinned against the Spark-side aggregate — and drop_staging must remove
-    the staging table AND every per-task table."""
+    """Fact-scale staging through PgParallelBackend: the driver COPYs the
+    Arrow collect over the backend's own psql session. Staging the sf0.1
+    lineitem fact (600 k rows) must load exactly the batch — count and a
+    value checksum pinned against the Spark-side aggregate — and
+    drop_staging must leave no table or view named like the staging
+    table."""
     from n2kupdate_spark.sources.jdbc import PgParallelBackend
 
     if not os.path.isdir("/root/testdata/sf0.1"):
@@ -583,11 +621,11 @@ def test_pg_parallel_copy_staging_fact_scale(spark, pg_server, pg):
 
 
 def test_pg_parallel_copy_task_retry_replaces_partition(spark, pg_server, pg):
-    """Exactly-once under task retry: a re-run task DROPs and recreates its
-    private table before COPYing, so rows from a failed earlier attempt can
-    never duplicate into the consolidated staging table. Simulated by
-    pre-poisoning the partition-0 table with rows a dead attempt would have
-    left behind."""
+    """Exactly-once staging: the batch is COPYed once, over the driver's
+    session, into a staging table of its own, so a table a dead earlier
+    attempt left behind — here one named like a per-task table of an
+    older executor-side staging path, holding rows — cannot add rows to
+    it."""
     from n2kupdate_spark.sources.jdbc import PgParallelBackend
 
     backend = PgParallelBackend(
@@ -608,6 +646,7 @@ def test_pg_parallel_copy_task_retry_replaces_partition(spark, pg_server, pg):
         assert [(int(k), int(v)) for k, v in rows] == [(i, 2 * i) for i in range(100)]
     finally:
         backend.drop_staging("staging_retry")
+        backend.con.execute("DROP TABLE IF EXISTS staging_retry_p0")
         backend.con.close()
 
 

@@ -1,6 +1,6 @@
 """Batch edge cases of the store path, pinned on every backend: DuckDB and
 sqlite3 (``DbApiBackend``), live PostgreSQL (``DbApiBackend`` over the psql
-shim, and ``PgParallelBackend`` where the staging path differs).
+shim, and ``PgParallelBackend``, which opens that shim itself).
 
 - staging keeps NULL, ``""``, NaN, timestamps, dates, decimals and booleans
   as the values the engine is given;
@@ -9,7 +9,9 @@ shim, and ``PgParallelBackend`` where the staging path differs).
 - NULL natural keys are rejected with ``ValidationError`` before the
   target is touched, and leave no staging relation behind — nor does a
   failed staging write or an empty batch;
-- a ``store_*`` call runs exactly one Spark job (the staging write).
+- a ``store_*`` call runs exactly one Spark job (the staging write) and
+  opens no database session beyond the backend's own;
+- the Arrow COPY encoder writes what the per-value encoder writes.
 """
 
 from __future__ import annotations
@@ -17,14 +19,17 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 import sqlite3
+import time
 
 import duckdb
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from n2kupdate_spark.api import N2kStore, ValidationError
+from n2kupdate_spark.sources import jdbc
 from n2kupdate_spark.sources.jdbc import DbApiBackend, PgParallelBackend
-from n2kupdate_spark.sources.pg_psql import PsqlConnection, PsqlError
+from n2kupdate_spark.sources.pg_psql import PsqlConnection, PsqlError, _copy_block, _copy_field
 
 LANGUAGE_DDL = "CREATE TABLE language (code VARCHAR, description VARCHAR, fingerprint VARCHAR)"
 VERSIONED_DDL = (
@@ -44,8 +49,7 @@ class Engine:
         return self.con.execute(sql).fetchall()
 
     def staging_relations(self) -> list[str]:
-        """Every table or view named like a staging relation, including
-        PgParallelBackend's per-task ``_p<n>`` tables."""
+        """Every table or view named like a staging relation."""
         if self.name == "sqlite3":
             sql = ("SELECT name FROM sqlite_master "
                    "WHERE type IN ('table', 'view') AND name LIKE 'staging%'")
@@ -196,16 +200,34 @@ def test_null_keys_rejected_before_write(spark, engine):
     assert engine.staging_relations() == []
 
 
-def test_failed_or_empty_staging_leaves_nothing_behind(spark, engine):
+def test_failed_or_empty_staging_leaves_nothing_behind(spark, engine, monkeypatch):
     """A task that dies during the staging write fails the call with its
-    own error; an empty batch stores nothing. Either way the target is as
-    it was and no staging relation is left (PgParallelBackend's staging
-    table then has no child table, or only some)."""
+    own error — also when it dies after another task's batches were
+    staged, mid-collect. An empty batch stores nothing. Either way the
+    target is as it was, no staging relation is left, and the connection
+    still works."""
+    staged = []
+
+    def counted(df, _inner=jdbc._arrow_batches):
+        for batch in _inner(df):
+            staged.append(batch.num_rows)
+            yield batch
+
+    monkeypatch.setattr(jdbc, "_arrow_batches", counted)
     st = N2kStore(engine.backend)
     boom = F.udf(lambda d: d if d != "boom" else str(1 // 0), "string")
     bad = _lang(spark, [("nl", "Dutch"), ("xx", "boom")], partitions=2)
     with pytest.raises(Exception, match="ZeroDivisionError"):
         st.store_language(bad.withColumn("description", boom("description")))
+    # Partition 0 (ids 0-99) is collected while partition 1 waits to fail.
+    late_boom = F.udf(lambda d: d if d != "boom" else str(time.sleep(1.5) or 1 // 0), "string")
+    ids = spark.range(0, 200, numPartitions=2)
+    late = ids.select(F.concat(F.lit("c"), F.col("id").cast("string")).alias("code"),
+                      late_boom(F.when(F.col("id") == 150, "boom").otherwise("ok")).alias("description"))
+    del staged[:]
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        st.store_language(late)
+    assert staged == [100]
     st.store_language(_lang(spark, []))
     assert engine.rows("SELECT * FROM language") == []
     assert engine.staging_relations() == []
@@ -233,18 +255,25 @@ def test_store_language_runs_one_spark_job(spark):
     con.close()
 
 
+OBSERVATION_DDL = (
+    "CREATE TABLE observation (external_code VARCHAR, datafield VARCHAR, "
+    "location VARCHAR, year INT, parent_observation VARCHAR, fingerprint VARCHAR)"
+)
+
+
+def _observations(spark):
+    return spark.createDataFrame(
+        [(f"O{i}", "df1", f"loc{i % 7}", 2000 + i % 20, None) for i in range(400)],
+        "external_code string, datafield string, location string, year int, "
+        "parent_observation string",
+    )
+
+
 def test_parallel_store_observation_runs_one_spark_job(spark, pg_server):
     con = _pg_con(pg_server)
-    con.execute(
-        "CREATE TABLE observation (external_code VARCHAR, datafield VARCHAR, "
-        "location VARCHAR, year INT, parent_observation VARCHAR, fingerprint VARCHAR)"
-    )
+    con.execute(OBSERVATION_DDL)
     try:
-        obs = spark.createDataFrame(
-            [(f"O{i}", "df1", f"loc{i % 7}", 2000 + i % 20, None) for i in range(400)],
-            "external_code string, datafield string, location string, year int, "
-            "parent_observation string",
-        )
+        obs = _observations(spark)
         backend = PgParallelBackend(host=pg_server["host"], port=pg_server["port"],
                                     max_parallel=obs.rdd.getNumPartitions())
         st = N2kStore(backend)
@@ -253,4 +282,92 @@ def test_parallel_store_observation_runs_one_spark_job(spark, pg_server):
         backend.con.close()
     finally:
         con.execute("DROP TABLE observation")
+        con.close()
+
+
+def test_parallel_store_observation_opens_no_other_session(spark, pg_server):
+    """The batch is staged over the backend's own session: the call
+    establishes no other PostgreSQL session. ``pg_stat_database.sessions``
+    counts a session once it has answered its first statement, so the
+    sessions of both connections here are counted before the call."""
+    con = _pg_con(pg_server)
+    con.execute(OBSERVATION_DDL)
+    backend = PgParallelBackend(host=pg_server["host"], port=pg_server["port"], max_parallel=4)
+    sessions = "SELECT sessions FROM pg_stat_database WHERE datname = current_database()"
+    try:
+        before = con.execute(sessions).fetchone()
+        N2kStore(backend).store_observation(_observations(spark).repartition(4))
+        assert con.execute(sessions).fetchone() == before
+        assert con.execute("SELECT COUNT(*) FROM observation").fetchone() == ("400",)
+    finally:
+        backend.con.close()
+        con.execute("DROP TABLE observation")
+        con.close()
+
+
+# --- the Arrow COPY encoder -------------------------------------------------
+
+#: Every staging column type (``jdbc._SQL_TYPE`` plus decimal).
+ENCODER_SCHEMA = ("k bigint, i int, h smallint, y tinyint, f double, r float, s string, "
+                  "b boolean, ts timestamp, d date, dec decimal(38,10)")
+ENCODER_ROWS = [
+    (1, None, None, None, None, None, None, None, None, None, None),
+    (2, 0, 0, 0, float("nan"), float("nan"), "", False,
+     dt.datetime(1999, 12, 31, 23, 59, 59), dt.date(1, 1, 1), decimal.Decimal("0")),
+    (3, -2**31, -2**15, -128, float("inf"), float("inf"), "\\.", True,
+     dt.datetime(2024, 1, 2, 3, 4, 5, 678901), dt.date(9999, 12, 31), decimal.Decimal("-12.3")),
+    (4, 2**31 - 1, 2**15 - 1, 127, float("-inf"), float("-inf"), "\\N", None,
+     dt.datetime(1970, 1, 1, 0, 0, 0, 5), dt.date(2024, 2, 29),
+     decimal.Decimal("9999999999999999999999999999.9999999999")),
+    (5, 7, 7, 7, 3.0, 3.0, ESCAPES, True, None, None, decimal.Decimal("0.0000000001")),
+    (6, -7, -7, -7, -0.0, -0.0, "h\u00e9llo \u2713", False, None, None, None),
+    (7, 1, 1, 1, 0.1 + 0.2, 0.1, "tab\t", None, None, None, None),
+    (8, 2, 2, 2, 1e300, 3.4028234663852886e38, "\\", None, None, None, None),
+    (9, 3, 3, 3, 5e-324, 1e-45, "\n", None, None, None, None),
+    (2**63 - 1, 4, 4, 4, -1.5e-7, -2.5, "\r\n", None, None, None, None),
+    (-2**63, 5, 5, 5, 123456789.0, 16777216.0, " ", None, None, None, None),
+]
+
+
+def test_copy_block_matches_copy_field(spark, pg_server):
+    """``_copy_block`` (Arrow kernels) against ``_copy_field`` (one value at
+    a time, on the values the executemany path binds), over several
+    record batches and an empty partition. Every non-float column is
+    byte-identical. Floats may be spelled shorter (``3`` for ``3.0``), so
+    both texts are COPYed into PostgreSQL and must read back the same. A
+    type the encoder has no text for is rejected."""
+    rows = spark.sparkContext.parallelize(ENCODER_ROWS, 2).union(spark.sparkContext.parallelize([], 1))
+    df = spark.createDataFrame(rows, ENCODER_SCHEMA)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        batches = list(jdbc._arrow_batches(df))
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert len(batches) > 2 and sum(b.num_rows for b in batches) == len(ENCODER_ROWS)
+    assert _copy_block(batches[0].slice(0, 0)) == b""
+    with pytest.raises(ValueError, match="no COPY text encoding"):  # not naive local time
+        _copy_block(pa.record_batch([pa.array([0], pa.timestamp("us", tz="UTC"))], names=["ts"]))
+
+    def reference(batch):
+        return zip(*map(jdbc._py_values, batch.columns))
+
+    exact = [c for c in df.columns if c not in ("f", "r")]
+    for batch in batches:
+        batch = batch.select(exact)
+        want = "".join("\t".join(map(_copy_field, r)) + "\n" for r in reference(batch))
+        assert bytes(_copy_block(batch)) == want.encode()
+
+    con = _pg_con(pg_server)
+    coldefs = ", ".join(f"{f.name} {jdbc._sql_type(f.dataType)}" for f in df.schema.fields)
+    try:
+        for t in ("enc_arrow", "enc_ref"):
+            con.execute(f"CREATE TABLE {t} ({coldefs})")
+        con.copy_arrow("enc_arrow", df.columns, batches)
+        con.copy_from_csv("enc_ref", df.columns, (r for b in batches for r in reference(b)))
+        got = con.execute("SELECT * FROM enc_arrow ORDER BY k").fetchall()
+        assert got == con.execute("SELECT * FROM enc_ref ORDER BY k").fetchall()
+        assert len(got) == len(ENCODER_ROWS)
+    finally:
+        for t in ("enc_arrow", "enc_ref"):
+            con.execute(f"DROP TABLE IF EXISTS {t}")
         con.close()
