@@ -4,13 +4,14 @@ The reference stages every ``store_*`` batch through one client-held COPY
 (`DBI::dbWriteTable`). Here the Spark batch reaches the driver from a
 single Arrow collect, one record batch at a time (bounded driver memory,
 no Python-worker job), and each record batch is encoded to COPY text by
-Arrow compute kernels and streamed into one ``\\copy … FROM STDIN``. Two
+Arrow compute kernels and streamed into one ``COPY … FROM STDIN``. Two
 transports share that path and the merge semantics:
 
 1. ``DbApiBackend`` + duckdb/sqlite — dim-sized batches, tests/notebooks
    (rows bound with ``executemany`` instead of COPY).
-2. ``DbApiBackend`` over the psql shim, or ``PgParallelBackend``, which
-   opens that shim itself from connection arguments — COPY staging.
+2. ``DbApiBackend`` over ``PsqlConnection`` (PostgreSQL's wire protocol,
+   no driver), or ``PgParallelBackend``, which opens that connection
+   itself from connection arguments — COPY staging.
    Measured ~245 k rows/s stage+merge for the four lineitem columns below
    (600 k rows) on a 4-vCPU host.
 
@@ -34,7 +35,7 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
-    for b in ("psql", "initdb", "pg_ctl"):
+    for b in ("initdb", "pg_ctl"):
         if not (shutil.which(b) or os.path.exists(f"/usr/local/bin/{b}")):
             print(f"SKIP: {b} not available")
             return 0

@@ -14,12 +14,12 @@ same validation/fingerprint/stage/merge lifecycle, with the warehouse
 behind a pluggable backend. Run it:
 
     python examples/reference_workflow.py            # DuckDB in-memory warehouse
-    python examples/reference_workflow.py --pg       # live PostgreSQL via psql shim
+    python examples/reference_workflow.py --pg       # live PostgreSQL, wire protocol
                                                      # (starts a throwaway server;
                                                      # needs PG binaries + postgres user)
 
 At fact scale the same code runs with `PgParallelBackend(host, port)`,
-which opens its own psql session: the driver COPYs the batch from one
+which opens its own PostgreSQL session: the driver COPYs the batch from one
 Arrow collect, record batch by record batch, and runs the merge
 statements on that session (sources/jdbc.py)."""
 

@@ -163,7 +163,7 @@ class N2kStore:
     ``backend`` is any object with the sources/jdbc.py backend protocol
     (``write_staging`` / ``fetchone`` / ``execute`` / ``drop_staging``) —
     DbApiBackend (DuckDB, sqlite3, PostgreSQL) or PgParallelBackend
-    (PostgreSQL over a psql session it opens itself).
+    (PostgreSQL over a protocol-v3 session it opens itself).
     """
 
     backend: object

@@ -21,10 +21,10 @@ insert-missing / update-changed / close-removed SQL inside one transaction
   concurrent loads can't collide) and are dropped on success.
 
 ``DbApiBackend`` drives any PEP 249 connection (DuckDB and sqlite3 in
-tests/test_jdbc_sink.py, PostgreSQL through the psql shim in
-tests/test_pg_live.py); ``PgParallelBackend`` is the same backend over a
-psql session it opens from connection arguments. The generated merge SQL
-is identical for every connection.
+tests/test_jdbc_sink.py, PostgreSQL through ``pg_psql.PsqlConnection``, a
+protocol-v3 client, in tests/test_pg_live.py); ``PgParallelBackend`` is the
+same backend over a session it opens from connection arguments. The
+generated merge SQL is identical for every connection.
 """
 
 from __future__ import annotations
@@ -275,14 +275,14 @@ def _py_values(col) -> list:
 
 class DbApiBackend:
     """Execute the sink against any DBAPI connection (DuckDB, sqlite3,
-    psycopg2, the psql shim).
+    psycopg2, ``pg_psql.PsqlConnection``).
 
     The staging write streams the batch through the driver from one Spark
     job (``_arrow_batches`` — bounded driver memory, fact-scale batches
     OK); the merge statements are the same SQL every backend runs. Each
     driver gets a typed CREATE TABLE generated from ``df.schema`` and
     either bulk COPY of each record batch (``copy_arrow`` when the
-    connection offers it — PostgreSQL via the psql shim) or a cursor
+    connection offers it — PostgreSQL via ``PsqlConnection``) or a cursor
     ``executemany`` of its rows (PEP 249 puts execute on cursors, not
     connections — sqlite3/duckdb connection-level execute is an
     extension). Exercised against DuckDB, sqlite3 and live PostgreSQL in
@@ -307,7 +307,7 @@ class DbApiBackend:
         self._cursor().execute(f"CREATE TABLE {staging} ({coldefs})")
         batches = _arrow_batches(df)
         if hasattr(self.con, "copy_arrow"):
-            # Bulk COPY path (PostgreSQL via the psql shim) — the same
+            # Bulk COPY path (PostgreSQL via PsqlConnection) — the same
             # wire path the reference's DBI::dbWriteTable staging write
             # uses; one roundtrip, server-side text-format parse, each
             # record batch encoded by Arrow kernels as it arrives.
@@ -325,7 +325,7 @@ class DbApiBackend:
     def fetchone(self, sql: str) -> tuple:
         """Run one query and return its first row (the staging probe)."""
         cur = self._cursor()
-        # sqlite3 returns a cursor, duckdb and the psql shim the
+        # sqlite3 returns a cursor, duckdb and PsqlConnection the
         # connection, psycopg2 None (the cursor holds the result)
         return tuple((cur.execute(sql) or cur).fetchone())
 
@@ -345,9 +345,9 @@ class DbApiBackend:
 
 
 class PgParallelBackend(DbApiBackend):
-    """``DbApiBackend`` over a ``PsqlConnection`` built from connection
-    arguments: one driver session stages every batch with ``copy_arrow``
-    and runs the probe and the merge.
+    """``DbApiBackend`` over a ``PsqlConnection`` (a protocol-v3 session)
+    built from connection arguments: one driver session stages every batch
+    with ``copy_arrow`` and runs the probe and the merge.
 
     Staging runs no Python-worker job and opens no session per task: the
     Arrow collect feeds the COPY directly. On a 4-vCPU host a 15k-row

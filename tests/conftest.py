@@ -61,10 +61,9 @@ def _free_port() -> int:
 
 @pytest.fixture(scope="module")
 def pg_server():
-    psql = shutil.which("psql")
     initdb = _find_bin("initdb")
     pg_ctl = _find_bin("pg_ctl")
-    if not (psql and initdb and pg_ctl):
+    if not (initdb and pg_ctl):
         pytest.skip("PostgreSQL binaries not available in this environment")
     try:
         pwd.getpwnam("postgres")

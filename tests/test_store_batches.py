@@ -1,6 +1,6 @@
 """Batch edge cases of the store path, pinned on every backend: DuckDB and
-sqlite3 (``DbApiBackend``), live PostgreSQL (``DbApiBackend`` over the psql
-shim, and ``PgParallelBackend``, which opens that shim itself).
+sqlite3 (``DbApiBackend``), live PostgreSQL (``DbApiBackend`` over
+``PsqlConnection``, and ``PgParallelBackend``, which opens one itself).
 
 - staging keeps NULL, ``""``, NaN, timestamps, dates, decimals and booleans
   as the values the engine is given;
@@ -63,7 +63,7 @@ def _pg_con(pg_server):
     try:
         return PsqlConnection(host=pg_server["host"], port=pg_server["port"])
     except (PsqlError, OSError) as e:  # pragma: no cover - env-dependent
-        pytest.skip(f"psql session unavailable: {e}")
+        pytest.skip(f"PostgreSQL session unavailable: {e}")
 
 
 @pytest.fixture(params=["duckdb", "sqlite3", "pg", "pg_parallel"])
@@ -117,7 +117,7 @@ TYPED_ROWS = [
 #: it: NULL stays NULL and "" stays "", NaN is staged as NULL, timestamps
 #: keep the wall-clock time they were given. sqlite3 has no DECIMAL,
 #: TIMESTAMP or BOOLEAN storage class: decimals land as REAL, timestamps
-#: and dates as ISO text, booleans as 0/1. The psql shim returns text.
+#: and dates as ISO text, booleans as 0/1. ``PsqlConnection`` returns text.
 STAGED = {
     "duckdb": [
         (1, None, None, None, None, None, None),
