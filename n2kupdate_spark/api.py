@@ -25,11 +25,12 @@ batch semantics come from the transactional merge in sources/jdbc.py).
 Rows repeating a fingerprint are resolved by the merge SQL, which keeps
 one deterministic winner.
 
-Scale notes: fingerprints are computed executor-side as Spark columns
-(md5 of '|'-joined natural keys — SURVEY.md §7.4.1: sha1 kept as an opt-in
-because the DuckDB oracle lacks it); a ``store_*`` call runs ONE Spark job,
-the staging write; the merge is set-based SQL on the server. Nothing here
-collects a fact table to the driver.
+Scale notes: fingerprints are computed executor-side (md5 of '|'-joined
+natural keys — SURVEY.md §7.4.1: sha1 kept as an opt-in because the DuckDB
+oracle lacks it); a ``store_*`` call runs ONE Spark job, the staging write;
+the merge is set-based SQL on the server. Nothing here collects a fact
+table to the driver. The staged frame is ONE projection built from SQL
+text: each Column-API call would be its own py4j round trip.
 """
 
 from __future__ import annotations
@@ -37,11 +38,10 @@ from __future__ import annotations
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from n2kupdate_spark.functions import fingerprint
-from n2kupdate_spark.sources.jdbc import ValidationError, upsert
+from n2kupdate_spark.functions import fingerprint_sql
+from n2kupdate_spark.sources.jdbc import ValidationError, _idents, upsert
 
 
 @dataclass(frozen=True)
@@ -127,33 +127,23 @@ TABLE_SPECS: dict[str, TableSpec] = {
 FINGERPRINT_COL = "fingerprint"
 
 
-def validate_frame(df: DataFrame, spec: TableSpec) -> DataFrame:
+def validate_frame(df: DataFrame, spec: TableSpec, algo: str = "md5") -> DataFrame:
     """The reference's column guards, on the schema alone (no Spark job):
-    required columns present, extra columns beyond the spec rejected.
-    Returns the frame projected to spec order. NULL natural keys are
-    rejected later, by ``upsert``'s probe on the staged batch."""
+    required columns present, no others, each a plain SQL identifier.
+    Returns ONE projection from SQL text: the spec columns in spec order
+    and, unless versioned, the ``algo`` fingerprint of the natural key.
+    NULL natural keys are rejected later, by ``upsert``'s probe."""
     missing = [c for c in spec.columns if c not in df.columns]
     if missing:
         raise ValidationError(f"{spec.name}: missing required columns {missing}")
     extra = [c for c in df.columns if c not in spec.columns]
     if extra:
         raise ValidationError(f"{spec.name}: unexpected columns {extra}")
-    return df.select(*spec.columns)
-
-
-def add_fingerprint(df: DataFrame, spec: TableSpec, algo: str = "md5") -> DataFrame:
-    """Stable surrogate key = hash of the ordered natural-key values — the
-    reference's digest::sha1 idempotence mechanism (md5 default, §7.4.1)."""
-    return df.withColumn(FINGERPRINT_COL, fingerprint(list(spec.natural_key), algo))
-
-
-def _first_per_fingerprint(df: DataFrame, spec: TableSpec) -> DataFrame:
-    """One row per fingerprint — the row the merge SQL keeps from a batch
-    that repeats one: first in ascending order of the spec columns, NULLs
-    last (sources.jdbc._source). Lazy: no job runs unless the caller acts."""
-    order = [F.col(c).asc_nulls_last() for c in spec.columns]
-    rn = F.row_number().over(Window.partitionBy(FINGERPRINT_COL).orderBy(*order))
-    return df.withColumn("n2k_rn", rn).filter("n2k_rn = 1").drop("n2k_rn")
+    cols = [f"`{c}`" for c in _idents(spec.columns)]
+    if spec.mode != "scd2_changes":
+        fp = fingerprint_sql(cols[: len(spec.natural_key)], algo)
+        cols.append(f"{fp} AS {FINGERPRINT_COL}")
+    return df.selectExpr(*cols)
 
 
 @dataclass
@@ -175,16 +165,17 @@ class N2kStore:
         return f"{self.schema}.{table}" if self.schema else table
 
     def _store(self, df: DataFrame, spec: TableSpec, batch_ts: str | None = None) -> DataFrame:
-        """validate → fingerprint → ``upsert``, whose staging write is the
-        call's one Spark job and whose probe rejects NULL natural keys."""
-        frame = validate_frame(df, spec)
+        """validate + fingerprint (one projection) → ``upsert``: the one
+        Spark job, then a probe that rejects NULL natural keys and counts
+        repeated fingerprints. Returns the projection or, after a repeat,
+        the row per fingerprint the merge keeps (``jdbc._source``); lazy."""
+        frame = validate_frame(df, spec, self.hash_algo)
         if spec.mode == "scd2_changes":  # versioned: keyed by the natural key
             keys, unique = list(spec.natural_key), None
         else:
-            frame = add_fingerprint(frame, spec, self.hash_algo)
             keys = list(spec.group_key) if spec.mode == "set_replace" else [FINGERPRINT_COL]
             unique = FINGERPRINT_COL
-        upsert(
+        staged = upsert(
             frame,
             self._target(spec.name),
             keys,
@@ -195,7 +186,11 @@ class N2kStore:
             unique=unique,
             batch_ts=batch_ts,
         )
-        return frame if unique is None else _first_per_fingerprint(frame, spec)
+        if not staged.repeats:
+            return frame
+        order = ", ".join(f"`{c}` ASC NULLS LAST" for c in spec.columns)
+        rn = f"row_number() OVER (PARTITION BY {FINGERPRINT_COL} ORDER BY {order}) AS n2k_rn"
+        return frame.selectExpr("*", rn).where("n2k_rn = 1").drop("n2k_rn")
 
     # --- dimension upserts (one per reference store_* export) -------------
 

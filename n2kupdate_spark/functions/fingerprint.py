@@ -41,3 +41,16 @@ def fingerprint(cols: list[str | Column], algo: str = "md5") -> Column:
     if algo == "sha1":
         return F.sha1(joined)
     raise ValueError(f"unsupported fingerprint algo {algo!r}")
+
+
+_SQL_HASH = {"md5": "md5({})", "sha256": "sha2({}, 256)", "sha1": "sha1({})"}
+
+
+def fingerprint_sql(exprs: list[str], algo: str = "md5") -> str:
+    """``fingerprint()`` as Spark SQL text — the same hash of the same
+    preimage — for a projection built in one ``selectExpr``. ``exprs`` go
+    into the text as given (e.g. backtick-quoted, already checked names)."""
+    if algo not in _SQL_HASH:
+        raise ValueError(f"unsupported fingerprint algo {algo!r}")
+    parts = ", ".join(f"CAST({e} AS STRING)" for e in exprs)
+    return _SQL_HASH[algo].format(f"concat_ws('{FINGERPRINT_SEP}', {parts})")

@@ -369,6 +369,12 @@ class PgParallelBackend(DbApiBackend):
         super().__init__(PsqlConnection(host=host, port=port, user=user, dbname=dbname))
 
 
+class Staged(str):
+    """A staging name; ``repeats`` counts rows beyond the first per ``unique``."""
+
+    repeats = 0
+
+
 def upsert(
     df: DataFrame,
     target: str,
@@ -380,7 +386,7 @@ def upsert(
     not_null: Sequence[str] = (),
     unique: str | None = None,
     batch_ts: str | None = None,
-) -> str:
+) -> Staged:
     """Idempotent upsert of ``df`` into ``target``: stage → probe → merge →
     clean.
 
@@ -393,22 +399,22 @@ def upsert(
     ``unique`` value makes the merge read one row per value (``_source``).
     A failed call drops its staging relation; a merged one keeps it only
     with ``clean=False``, mirroring the reference's ``clean`` argument.
-    Returns the staging name.
+    Returns the staging name, with the probe's repeat count.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    staging = f"staging_{target.replace('.', '_')}_{run_id}"
+    staging = Staged(f"staging_{target.replace('.', '_')}_{run_id}")
     try:
         backend.write_staging(df, staging)
-        n_null = n_dup = 0
+        n_null = 0
         if not_null or unique:
-            n_null, n_dup = map(int, backend.fetchone(sql_probe(staging, not_null, unique)))
+            n_null, staging.repeats = map(int, backend.fetchone(sql_probe(staging, not_null, unique)))
         if n_null:
             raise ValidationError(f"{target}: {n_null} rows with NULL natural-key values")
         if mode == "scd2_changes":
             compare = [c for c in df.columns if c not in keys]
             stmts = sql_merge_scd2_changes(target, staging, keys, compare, batch_ts)
         else:
-            dedup_on = unique if n_dup else None
+            dedup_on = unique if staging.repeats else None
             stmts = MERGE_SQL[mode](target, staging, keys, df.columns, dedup_on=dedup_on)
         backend.execute(stmts)
     except Exception:

@@ -10,6 +10,8 @@ import socket
 import subprocess
 import sys
 import tempfile
+import threading
+from unittest import mock
 
 import duckdb
 import pytest
@@ -27,6 +29,23 @@ SF_DIR = os.environ.get("N2K_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     spark = get_spark(app_name="n2kupdate-tests", shuffle_partitions=8)
     yield spark
+
+
+def py4j_commands(spark, fn) -> int:
+    """The number of py4j commands this thread sends while ``fn`` runs: each
+    is a round trip to the JVM. py4j's finalizer thread, which sends the
+    detach commands of garbage whenever it wakes, is not counted."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, sent = client.send_command, threading.get_ident(), []
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(args)
+        return send(*args, **kwargs)
+
+    with mock.patch.object(client, "send_command", counted):
+        fn()
+    return len(sent)
 
 
 @pytest.fixture(scope="session")

@@ -5,6 +5,8 @@ membership rows are removed on set-replacement."""
 
 from __future__ import annotations
 
+import hashlib
+
 import duckdb
 import pytest
 
@@ -43,6 +45,17 @@ def test_junk_input_rejected_before_write(spark, store):
     with pytest.raises(ValidationError, match="NULL natural-key"):
         st.store_language(_lang(spark, [(None, "mystery")]))
     assert con.execute("SELECT COUNT(*) FROM language").fetchone()[0] == 0
+    # A caller-named column goes into Spark SQL text only as a plain
+    # identifier; this one would close its quotes and add a column.
+    hostile = "code`, 1 AS `x"
+    with pytest.raises(ValueError, match="invalid SQL identifier"):
+        st.store_versioned_dim(
+            _lang(spark, [("nl", "Dutch")]).toDF(hostile, "description"), "language_v",
+            keys=[hostile], compare_cols=["description"], batch_ts="2026-01-01 00:00:00",
+        )
+    assert con.execute(
+        "SELECT COUNT(*) FROM information_schema.tables WHERE table_name LIKE 'staging%'"
+    ).fetchone()[0] == 0
 
 
 def test_minimal_store_and_idempotence(spark, store):
@@ -53,6 +66,24 @@ def test_minimal_store_and_idempotence(spark, store):
     assert con.execute("SELECT COUNT(*) FROM language").fetchone()[0] == 2
     st.store_language(batch)  # storing the same frame twice: no new rows
     assert con.execute("SELECT COUNT(*) FROM language").fetchone()[0] == 2
+    # Under every hash the stored fingerprint is the digest of the
+    # '|'-joined key values, and the returned frame (no repeated
+    # fingerprint) is exactly what was stored.
+    lang = _lang(spark, [("", "empty"), ("a|b", "pipe"), ("é漢🙂", "non-ASCII")])
+    members = spark.createDataFrame(
+        [("g|1", ""), ("g|1", "sp|2"), ("grüße", "漢🙂")], "species_group string, species string"
+    )
+    for algo in ("md5", "sha256", "sha1"):
+        con.execute("DELETE FROM language")
+        con.execute("DELETE FROM species_group_species")
+        st_algo = N2kStore(backend=DbApiBackend(con), hash_algo=algo)
+        outs = [st_algo.store_language(lang), st_algo.store_species_group_species(members)]
+        for out, table, n_keys in zip(outs, ("language", "species_group_species"), (1, 2)):
+            stored = sorted(con.execute(f"SELECT * FROM {table}").fetchall())
+            assert sorted(map(tuple, out.collect())) == stored
+            for row in stored:
+                key = "|".join(v for v in row[:n_keys] if v is not None)
+                assert row[-1] == hashlib.new(algo, key.encode()).hexdigest()
 
 
 def test_update_branch_overwrites_attribute(spark, store):

@@ -26,6 +26,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import py4j_commands
 from n2kupdate_spark.api import N2kStore, ValidationError
 from n2kupdate_spark.sources import jdbc
 from n2kupdate_spark.sources.jdbc import DbApiBackend, PgParallelBackend
@@ -252,6 +253,9 @@ def test_store_language_runs_one_spark_job(spark):
     batch = _lang(spark, [("nl", "Dutch"), ("fr", "French"), ("nl", "Nederlands")])
     assert _jobs_in_group(spark, "n2k-one-job-dim", lambda: st.store_language(batch)) == 1
     assert con.execute("SELECT COUNT(*) FROM language").fetchone()[0] == 2
+    # The call's frames are built from SQL text: each Column-API call would
+    # be its own round trip to the JVM (over 100 for this call).
+    assert py4j_commands(spark, lambda: st.store_language(batch)) <= 40
     con.close()
 
 
