@@ -16,7 +16,10 @@ insert-missing / update-changed / close-removed SQL inside one transaction
   repeated fingerprints switch the merge to a deduplicated source.
 - **The driver runs set-based merge statements** over the staging table
   — the database's planner does the join, exactly as PostgreSQL does for
-  the reference.
+  the reference. They write only what changes: an UPDATE or SCD2 close
+  is gated on ``_differs``, one two-valued null-safe "some column
+  differs" predicate, and set-replace deletes absent members and inserts
+  new ones, so a replayed batch writes no tuple.
 - Staging names embed a run id (the reference hashes for the same reason:
   concurrent loads can't collide) and are dropped on success.
 
@@ -78,6 +81,16 @@ def sql_probe(staging: str, not_null: Sequence[str], unique: str | None) -> str:
     return f"SELECT COALESCE(SUM(CASE WHEN {any_null} THEN 1 ELSE 0 END), 0), {dups} FROM {staging}"
 
 
+def _differs(columns: Sequence[str]) -> str:
+    """``t`` and ``s`` differ in some of ``columns``, NULL-safely. The
+    predicate is TRUE or FALSE for every input, never NULL, so it may be
+    negated. ``NOT (t.c = s.c OR (t.c IS NULL AND s.c IS NULL))`` may not:
+    it is NULL when exactly one side is NULL, which PostgreSQL and sqlite
+    treat as "no change" while DuckDB rewrites it to ``IS DISTINCT FROM``.
+    ``IS DISTINCT FROM`` runs on PostgreSQL, DuckDB and sqlite 3.39+."""
+    return " OR ".join(f"t.{c} IS DISTINCT FROM s.{c}" for c in _idents(columns)) or "1 = 0"
+
+
 def _source(staging: str, columns: Sequence[str], dedup_on: str | None) -> str:
     """The merge's FROM source: the staging relation, or — when the batch
     repeats a ``dedup_on`` value — one row per value. The winner is the
@@ -99,7 +112,8 @@ def _source(staging: str, columns: Sequence[str], dedup_on: str | None) -> str:
 def sql_merge_scd1(
     target: str, staging: str, keys: Sequence[str], columns: Sequence[str], dedup_on: str | None = None
 ) -> list[str]:
-    """UPDATE-changed + INSERT-missing (⟨pub⟩ R/store_language.R pattern)."""
+    """UPDATE-changed + INSERT-missing (⟨pub⟩ R/store_language.R pattern).
+    The UPDATE touches only matched rows whose attributes differ."""
     insert = sql_merge_insert_ignore(target, staging, keys, columns, dedup_on)
     attrs = [c for c in columns if c not in keys]
     if not attrs:
@@ -107,7 +121,10 @@ def sql_merge_scd1(
     on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
     set_clause = ", ".join(f"{c} = s.{c}" for c in attrs)
     src = _source(staging, columns, dedup_on)
-    return [f"UPDATE {target} AS t SET {set_clause} FROM {src} s WHERE {on}", *insert]
+    return [
+        f"UPDATE {target} AS t SET {set_clause} FROM {src} s WHERE {on} AND ({_differs(attrs)})",
+        *insert,
+    ]
 
 
 def sql_merge_insert_ignore(
@@ -127,18 +144,36 @@ def sql_merge_insert_ignore(
 
 
 def sql_merge_set_replace(
-    target: str, staging: str, group_cols: Sequence[str], columns: Sequence[str], dedup_on: str | None = None
+    target: str, staging: str, group_cols: Sequence[str], columns: Sequence[str],
+    dedup_on: str | None = None, match_on: str | None = None,
 ) -> list[str]:
-    """Replace membership wholesale for groups present in staging
-    (⟨pub⟩ R/store_location_group_location.R pattern)."""
+    """Replace membership for the groups present in staging (⟨pub⟩
+    R/store_location_group_location.R pattern) as a diff: delete the
+    members of those groups that match no staged row, then insert the
+    staged rows that match no member, so members that stay are not
+    rewritten. Rows match on plain equality of every column or, given
+    ``match_on`` (the fingerprint), of that column while no other column
+    ``_differs``; a NULL in an equality column matches nothing, so its row
+    is rewritten, never lost. One equality lets the planner hash the match
+    (PostgreSQL merge-joins on two). With distinct staged rows and members
+    the result is the wholesale delete and re-insert of those groups."""
     target, staging = _ident(target), _ident(staging)
-    on = " AND ".join(f"t.{g} = s.{g}" for g in _idents(group_cols))
     columns = _idents(columns)
+    equal = [_ident(match_on)] if match_on else columns
+    match = " AND ".join(f"t.{c} = s.{c}" for c in equal)
+    rest = [c for c in columns if c not in equal]
+    if rest:
+        match += f" AND NOT ({_differs(rest)})"
+    in_group = " AND ".join(f"g.{c} = t.{c}" for c in _idents(group_cols))
+    # in the INSERT it only shrinks the hashed side to the staged groups
+    member = f"EXISTS (SELECT 1 FROM {staging} g WHERE {in_group})"
     src = _source(staging, columns, dedup_on)
     collist = ", ".join(columns)
     return [
-        f"DELETE FROM {target} AS t WHERE EXISTS (SELECT 1 FROM {staging} s WHERE {on})",
-        f"INSERT INTO {target} ({collist}) SELECT {collist} FROM {src} s",
+        f"DELETE FROM {target} AS t WHERE {member} "
+        f"AND NOT EXISTS (SELECT 1 FROM {src} s WHERE {match})",
+        f"INSERT INTO {target} ({collist}) SELECT {collist} FROM {src} s "
+        f"WHERE NOT EXISTS (SELECT 1 FROM {target} t WHERE {member} AND {match})",
     ]
 
 
@@ -151,21 +186,17 @@ def sql_merge_scd2_changes(
 ) -> list[str]:
     """Server-side twin of operators.merge.merge_scd2_changes (full classic
     SCD2): close open rows absent from staging, close-and-reopen open rows
-    whose compared attributes changed, open brand-new keys. Attribute
-    comparison is null-safe via the portable (a = b OR (a IS NULL AND b IS
-    NULL)) form — `IS NOT DISTINCT FROM` predates sqlite 3.39 and the
-    expansion runs identically on DuckDB/PostgreSQL/sqlite. Statement order
-    is load-bearing: the changed rows must be closed before the insert's
-    "no open row for this key" predicate runs. The target carries the
-    validity window as ``valid_from``/``valid_to`` (NULL = open)."""
+    whose compared attributes changed, open brand-new keys. A change is
+    ``_differs``: two-valued, so a change between NULL and a value closes
+    the row on every engine. Statement order is load-bearing: the changed
+    rows must be closed before the insert's "no open row for this key"
+    predicate runs. The target carries the validity window as
+    ``valid_from``/``valid_to`` (NULL = open)."""
     target, staging = _ident(target), _ident(staging)
     batch_ts = _ts_literal(batch_ts)
     ks = _idents(keys)
     cs = _idents(compare_cols)
     on = " AND ".join(f"t.{k} = s.{k}" for k in ks)
-    same = " AND ".join(
-        f"(t.{c} = s.{c} OR (t.{c} IS NULL AND s.{c} IS NULL))" for c in cs
-    )
     keylist = ", ".join(ks)
     collist = ", ".join(cs)
     return [
@@ -175,7 +206,7 @@ def sql_merge_scd2_changes(
         f"AND NOT EXISTS (SELECT 1 FROM {staging} s WHERE {on})",
         # 2. close open rows whose compared attributes changed
         f"UPDATE {target} AS t SET valid_to = '{batch_ts}' "
-        f"FROM {staging} s WHERE t.valid_to IS NULL AND {on} AND NOT ({same})",
+        f"FROM {staging} s WHERE t.valid_to IS NULL AND {on} AND ({_differs(cs)})",
         # 3. open a row for every staging key with no surviving open row
         #    (covers both changed keys — just closed — and brand-new keys)
         f"INSERT INTO {target} ({keylist}, {collist}, valid_from, valid_to) "
@@ -396,7 +427,8 @@ def upsert(
     (``sql_probe``), run only when ``not_null`` or ``unique`` is given. A
     NULL in a ``not_null`` column rejects the batch with
     ``ValidationError`` before the target is touched; a repeated
-    ``unique`` value makes the merge read one row per value (``_source``).
+    ``unique`` value makes the merge read one row per value (``_source``);
+    set-replace also matches rows on ``unique``.
     A failed call drops its staging relation; a merged one keeps it only
     with ``clean=False``, mirroring the reference's ``clean`` argument.
     Returns the staging name, with the probe's repeat count.
@@ -410,11 +442,13 @@ def upsert(
             n_null, staging.repeats = map(int, backend.fetchone(sql_probe(staging, not_null, unique)))
         if n_null:
             raise ValidationError(f"{target}: {n_null} rows with NULL natural-key values")
+        dedup_on = unique if staging.repeats else None
         if mode == "scd2_changes":
             compare = [c for c in df.columns if c not in keys]
             stmts = sql_merge_scd2_changes(target, staging, keys, compare, batch_ts)
+        elif mode == "set_replace":
+            stmts = sql_merge_set_replace(target, staging, keys, df.columns, dedup_on, unique)
         else:
-            dedup_on = unique if staging.repeats else None
             stmts = MERGE_SQL[mode](target, staging, keys, df.columns, dedup_on=dedup_on)
         backend.execute(stmts)
     except Exception:

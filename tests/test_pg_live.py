@@ -686,3 +686,128 @@ def test_pg_parallel_backend_upsert_end_to_end(spark, sf_dir, pg_server, pg):
         assert stray == ("0",)
     finally:
         backend.con.close()
+
+
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite3", "pg"])
+def test_scd2_versions_a_change_between_null_and_a_value(engine, request):
+    """A compared attribute that goes from NULL to a value, or from a value
+    to NULL, is a change on every engine: both keys are closed and
+    reopened. A three-valued compare (``NOT (a = b OR (a IS NULL AND b IS
+    NULL))``) is NULL there, and PostgreSQL and sqlite then left both keys
+    unversioned while DuckDB versioned them."""
+    import sqlite3
+
+    import duckdb
+
+    from n2kupdate_spark.sources.jdbc import sql_merge_scd2_changes
+
+    con = {
+        "duckdb": duckdb.connect,
+        "sqlite3": lambda: sqlite3.connect(":memory:", isolation_level=None),
+        "pg": lambda: request.getfixturevalue("pg"),
+    }[engine]()
+    try:
+        con.execute(
+            "CREATE TABLE v_t (code VARCHAR, nation VARCHAR, acctbal VARCHAR, "
+            "valid_from VARCHAR, valid_to VARCHAR)"
+        )
+        con.execute("CREATE TABLE v_s (code VARCHAR, nation VARCHAR, acctbal VARCHAR)")
+        con.execute(
+            "INSERT INTO v_t VALUES ('a', NULL, '1', '2025-01-01 00:00:00', NULL), "
+            "('b', 'N1', '2', '2025-01-01 00:00:00', NULL)"
+        )
+        con.execute("INSERT INTO v_s VALUES ('a', 'N9', '1'), ('b', NULL, '2')")
+        DbApiBackend(con).execute(sql_merge_scd2_changes(
+            "v_t", "v_s", ["code"], ["nation", "acctbal"], "2025-02-01 00:00:00"
+        ))
+        got = con.execute("SELECT code, nation, valid_from, valid_to FROM v_t").fetchall()
+        assert sorted(map(tuple, got), key=repr) == sorted([
+            ("a", None, "2025-01-01 00:00:00", "2025-02-01 00:00:00"),
+            ("a", "N9", "2025-02-01 00:00:00", None),
+            ("b", None, "2025-02-01 00:00:00", None),
+            ("b", "N1", "2025-01-01 00:00:00", "2025-02-01 00:00:00"),
+        ], key=repr)
+    finally:
+        con.execute("DROP TABLE IF EXISTS v_t")
+        con.execute("DROP TABLE IF EXISTS v_s")
+        if engine != "pg":
+            con.close()
+
+
+def _tuples_written(writer, reader, table: str) -> int:
+    """Tuples inserted, updated and deleted in ``table`` so far, as
+    ``pg_stat_user_tables`` reads once ``writer`` has flushed its counts."""
+    writer.execute("SELECT pg_stat_force_next_flush()")
+    reader.execute("SELECT pg_stat_clear_snapshot()")
+    (n,) = reader.execute(
+        "SELECT n_tup_ins + n_tup_upd + n_tup_del FROM pg_stat_user_tables "
+        "WHERE relname = ?",
+        (table,),
+    ).fetchone()
+    return int(n)
+
+
+def test_pg_merges_write_only_what_changed(spark, pg_server, pg):
+    """A replayed batch writes no tuple; a batch with k changed rows (one
+    of them a change between NULL and a value) and m new rows writes
+    exactly k + m; re-storing a group's members writes none, and a member
+    that leaves plus one that joins write two — read from PostgreSQL's own
+    per-table counters."""
+    from n2kupdate_spark.api import N2kStore
+
+    schema = "scientific_name string, nbn_key string, euring_code string, gbif_id string"
+    rows = [(f"sp{i}", f"nbn{i}", None if i % 3 else f"E{i}", str(i)) for i in range(12)]
+    members = spark.createDataFrame(
+        [("g1", "sp1"), ("g1", "sp2"), ("g2", "sp3")], "species_group string, species string"
+    )
+    reader = PsqlConnection(host=pg_server["host"], port=pg_server["port"])
+    try:
+        pg.execute(
+            "CREATE TABLE species (scientific_name VARCHAR, nbn_key VARCHAR, "
+            "euring_code VARCHAR, gbif_id VARCHAR, fingerprint VARCHAR)"
+        )
+        pg.execute(
+            "CREATE TABLE species_group_species "
+            "(species_group VARCHAR, species VARCHAR, fingerprint VARCHAR)"
+        )
+        st = N2kStore(backend=DbApiBackend(pg))
+        batch = spark.createDataFrame(rows, schema)
+        st.store_species(batch)
+        before = _tuples_written(pg, reader, "species")
+        assert before == len(rows)
+        st.store_species(batch)
+        assert _tuples_written(pg, reader, "species") - before == 0
+
+        changed = [
+            ("sp0", "nbn0", None, "0"),  # euring_code 'E0' -> NULL
+            ("sp1", "nbn1", "E1", "1"),  # euring_code NULL -> 'E1'
+            ("sp2", "nbn2-x", None, "2"),
+        ]
+        new = [("sp12", "nbn12", None, "12"), ("sp13", "nbn13", "E13", "13")]
+        before = _tuples_written(pg, reader, "species")
+        st.store_species(spark.createDataFrame(changed + rows[3:] + new, schema))
+        assert _tuples_written(pg, reader, "species") - before == len(changed) + len(new)
+        got = dict(
+            (n, (b, e)) for n, b, e in pg.execute(
+                "SELECT scientific_name, nbn_key, euring_code FROM species"
+            ).fetchall()
+        )
+        assert got["sp0"] == ("nbn0", None) and got["sp1"] == ("nbn1", "E1")
+        assert got["sp2"] == ("nbn2-x", None) and len(got) == 14
+
+        st.store_species_group_species(members)
+        before = _tuples_written(pg, reader, "species_group_species")
+        st.store_species_group_species(members)
+        assert _tuples_written(pg, reader, "species_group_species") - before == 0
+        # sp2 leaves g1 and sp4 joins it: one delete, one insert; g2 stays
+        st.store_species_group_species(spark.createDataFrame(
+            [("g1", "sp1"), ("g1", "sp4")], "species_group string, species string"
+        ))
+        assert _tuples_written(pg, reader, "species_group_species") - before == 2
+        assert sorted(pg.execute(
+            "SELECT species_group, species FROM species_group_species"
+        ).fetchall()) == [("g1", "sp1"), ("g1", "sp4"), ("g2", "sp3")]
+    finally:
+        reader.close()
+        pg.execute("DROP TABLE IF EXISTS species")
+        pg.execute("DROP TABLE IF EXISTS species_group_species")
