@@ -24,32 +24,25 @@ from pyspark.sql import functions as F
 FINGERPRINT_SEP = "|"
 
 
-def fingerprint(cols: list[str | Column], algo: str = "md5") -> Column:
-    """Stable row fingerprint = hash of ordered key values.
+def fingerprint(cols: list[str], algo: str = "md5") -> Column:
+    """Stable row fingerprint = hash of the ordered values of the named
+    columns: :func:`fingerprint_sql` as a Column, so the two share one
+    preimage.
 
     Null-safe: nulls hash as the empty string (concat_ws skips nulls), which
     matches DuckDB's concat_ws and keeps both engines byte-identical.
     """
-    parts = [
-        (F.col(c) if isinstance(c, str) else c).cast("string") for c in cols
-    ]
-    joined = F.concat_ws(FINGERPRINT_SEP, *parts)
-    if algo == "md5":
-        return F.md5(joined)
-    if algo == "sha256":
-        return F.sha2(joined, 256)
-    if algo == "sha1":
-        return F.sha1(joined)
-    raise ValueError(f"unsupported fingerprint algo {algo!r}")
+    return F.expr(fingerprint_sql([f"`{c.replace('`', '``')}`" for c in cols], algo))
 
 
 _SQL_HASH = {"md5": "md5({})", "sha256": "sha2({}, 256)", "sha1": "sha1({})"}
 
 
 def fingerprint_sql(exprs: list[str], algo: str = "md5") -> str:
-    """``fingerprint()`` as Spark SQL text — the same hash of the same
-    preimage — for a projection built in one ``selectExpr``. ``exprs`` go
-    into the text as given (e.g. backtick-quoted, already checked names)."""
+    """The fingerprint as Spark SQL text: the one definition of its hash
+    and preimage, which ``fingerprint()`` wraps as a Column, for a
+    projection built in one ``selectExpr``. ``exprs`` go into the text as
+    given (e.g. backtick-quoted, already checked names)."""
     if algo not in _SQL_HASH:
         raise ValueError(f"unsupported fingerprint algo {algo!r}")
     parts = ", ".join(f"CAST({e} AS STRING)" for e in exprs)

@@ -13,8 +13,14 @@ Here each merge is a *pure function of (current_state, incoming_batch)*:
   - executed as joins/unions, so Catalyst plans them and they scale with the
     shuffle (no driver-side row loops — SURVEY.md §7.1 design rule).
 
-The JDBC execution of the same logic (staging table + server-side MERGE) is
-``n2kupdate_spark.sources.jdbc`` — that sink *uses* these semantics.
+``n2kupdate_spark.sources.jdbc`` is the SQL twin of these transforms (a
+staging table merged server-side); tests/test_jdbc_sink.py asserts the two
+give equal results.
+
+The attribute-diffing merges (``merge_scd2_changes``, ``full_outer_diff``,
+``merge_scd3``, ``merge_scd4``, ``merge_scd6``) are projections of one
+change-detection step, ``_keyed_diff``, and compare through one null-safe
+predicate, ``_differs``.
 
 Scale notes: every transform is key-partitioned joins + unions only. The
 incoming batch is typically ≪ target; Spark/AQE broadcast the small side
@@ -110,6 +116,52 @@ def merge_scd2_close(
     )
 
 
+def _differs(cols: Sequence[str]) -> Column:
+    """Some ``c`` in ``cols`` differs from its incoming twin ``__i_<c>``,
+    NULL-safely: TRUE or FALSE, never NULL, so it may be negated. The
+    Column twin of ``sources.jdbc._differs``."""
+    out: Column = F.lit(False)
+    for c in cols:
+        out = out | ~F.col(c).eqNullSafe(F.col(f"__i_{c}"))
+    return out
+
+
+def _keyed_diff(
+    target: DataFrame, incoming: DataFrame, keys: Sequence[str], compare_cols: Sequence[str]
+) -> DataFrame:
+    """The change-detection step every attribute-diffing merge projects:
+    ONE full-outer join of ``target`` and ``incoming`` on ``keys`` alone.
+
+    Each row holds the key columns, the target's other columns by name,
+    the incoming's as ``__i_<c>``, and three flags, each TRUE or FALSE:
+    ``__in_t`` and ``__in_i`` (the key is on that side) and ``__chg``
+    (on both sides, and ``_differs`` on ``compare_cols``).
+
+    Keys are unique within each side, so each key is one row; a key
+    repeated in one side would yield one row per pair, which no merge
+    here expects. Joining on the keys only, never on the compared
+    attributes, lets a target and a batch bucketed on the merge key run
+    the merge with no exchange (tests/test_plans.py)."""
+    keys = list(keys)
+    inc = incoming.select(
+        *keys,
+        F.lit(True).alias("__in_i"),
+        *[F.col(c).alias(f"__i_{c}") for c in incoming.columns if c not in keys],
+    )
+    j = target.withColumn("__in_t", F.lit(True)).join(inc, on=keys, how="full")
+    in_t, in_i = F.col("__in_t").isNotNull(), F.col("__in_i").isNotNull()
+    return j.withColumns(
+        {"__in_t": in_t, "__in_i": in_i, "__chg": in_t & in_i & _differs(compare_cols)}
+    )
+
+
+def _upserted(c: str) -> Column:
+    """Column ``c`` of a ``_keyed_diff`` row after an SCD1 overwrite: the
+    incoming value for a new or changed key, the target's otherwise."""
+    take = F.col("__chg") | ~F.col("__in_t")
+    return F.when(take, F.col(f"__i_{c}")).otherwise(F.col(c)).alias(c)
+
+
 def merge_scd2_changes(
     target: DataFrame,
     incoming: DataFrame,
@@ -133,71 +185,37 @@ def merge_scd2_changes(
     This is :func:`merge_scd2_close` (presence-only) extended with the
     update-changed branch of :func:`merge_scd1` — i.e. the versioned form
     of the reference's insert-missing/update-changed/close-removed triple
-    in one transform. Attribute comparison is null-safe (``eqNullSafe``).
+    in one transform. Attribute comparison is null-safe (``_differs``).
     Contract: ``target`` columns are exactly keys + compare_cols +
     validity columns; ``incoming`` is keys + compare_cols.
 
-    Scale: ONE full-outer join of open rows vs the batch, keyed on the key
-    columns alone, followed by a projection that emits each joined row's
-    0-2 output versions as an exploded array — no window, no driver work;
-    idempotent (re-applying the same batch changes nothing —
-    property-tested). The single-join shape matters twice at 100 TB: the
-    earlier union-of-filtered-branches formulation made Catalyst plan the
-    join once PER BRANCH (4 scans + 4 shuffles of the target), and folding
-    the branch predicates into join conditions turned the null-safe
-    attribute comparisons into extra equi-join keys — which broke
-    co-located (bucketed-on-key) layouts with re-shuffles. With the join
-    on the keys only, a target and staging batch bucketed on the merge key
-    run this merge with zero exchanges (tests/test_plans.py)."""
+    Scale: the open rows' ``_keyed_diff`` against the batch, then one
+    projection that emits each key's 0-2 output versions through
+    ``inline`` — no window, no driver work; idempotent (re-applying the
+    same batch changes nothing — property-tested)."""
     keys = list(keys)
     compare_cols = list(compare_cols)
     open_rows = target.filter(F.col(valid_to).isNull())
     closed_rows = target.filter(F.col(valid_to).isNotNull())
+    d = _keyed_diff(open_rows, incoming, keys, compare_cols)
 
-    i = incoming.select(
-        *keys,
-        F.lit(1).alias("__in_inc"),
-        *[F.col(c).alias(f"__i_{c}") for c in compare_cols],
-    )
-    j = open_rows.withColumn("__in_tgt", F.lit(1)).join(i, on=keys, how="full")
-
-    changed: Column = F.lit(False)
-    for c in compare_cols:
-        changed = changed | ~F.col(c).eqNullSafe(F.col(f"__i_{c}"))
-    in_tgt = F.col("__in_tgt").isNotNull()
-    in_inc = F.col("__in_inc").isNotNull()
-
-    def _version(cols: list[Column], vf: Column, vt: Column) -> Column:
+    def version(prefix: str, vf: Column, vt: Column) -> Column:
         return F.struct(
-            *[c.alias(f"_{n}") for n, c in zip(compare_cols, cols)],
-            vf.cast("string").alias("_vf"),
-            vt.cast("string").alias("_vt"),
+            *[F.col(prefix + c).alias(c) for c in compare_cols],
+            vf.cast("string").alias(valid_from),
+            vt.cast("string").alias(valid_to),
         )
 
-    tgt_attrs = [F.col(c) for c in compare_cols]
-    inc_attrs = [F.col(f"__i_{c}") for c in compare_cols]
-    null_ts = F.lit(None).cast("string")
-    keep_open = _version(tgt_attrs, F.col(valid_from), null_ts)
-    close_tgt = _version(tgt_attrs, F.col(valid_from), F.lit(batch_ts))
-    open_inc = _version(inc_attrs, F.lit(batch_ts), null_ts)
-
+    close = version("", F.col(valid_from), F.lit(batch_ts))
+    reopen = version("__i_", F.lit(batch_ts), F.lit(None))
     versions = (
-        F.when(in_tgt & in_inc & ~changed, F.array(keep_open))
-        .when(in_tgt & in_inc & changed, F.array(close_tgt, open_inc))
-        .when(in_tgt & ~in_inc, F.array(close_tgt))
-        .otherwise(F.array(open_inc))
-    )
-    merged_open = (
-        j.select(*keys, F.explode(versions).alias("__v"))
-        .select(
-            *keys,
-            *[F.col(f"__v._{c}").alias(c) for c in compare_cols],
-            F.col("__v._vf").alias(valid_from),
-            F.col("__v._vt").alias(valid_to),
-        )
+        F.when(F.col("__chg"), F.array(close, reopen))
+        .when(~F.col("__in_i"), F.array(close))
+        .when(~F.col("__in_t"), F.array(reopen))
+        .otherwise(F.array(version("", F.col(valid_from), F.lit(None))))
     )
     tgt_cols = keys + compare_cols + [valid_from, valid_to]
-    return closed_rows.select(*tgt_cols).unionByName(merged_open)
+    return closed_rows.select(*tgt_cols).unionByName(d.select(*keys, F.inline(versions)))
 
 
 def full_outer_diff(
@@ -214,33 +232,23 @@ def full_outer_diff(
     made explicit so a pipeline can route rows (SURVEY.md §2
     ``join_full_outer_diff``).
 
-    Output: key columns + ``change`` + target/incoming values of the compared
-    columns (``<c>_old`` / ``<c>_new``).
+    Output: key columns + target/incoming values of the compared columns
+    (``<c>_old`` / ``<c>_new``) + ``change``.
     """
     keys = list(keys)
-    t = target.select(
-        *[F.col(k) for k in keys],
-        F.lit(1).alias("__in_target"),
-        *[F.col(c).alias(f"{c}_old") for c in compare_cols],
-    )
-    i = incoming.select(
-        *[F.col(k) for k in keys],
-        F.lit(1).alias("__in_incoming"),
-        *[F.col(c).alias(f"{c}_new") for c in compare_cols],
-    )
-    joined = t.join(i, on=keys, how="full")
-
-    changed: Column = F.lit(False)
-    for c in compare_cols:
-        changed = changed | ~F.col(f"{c}_old").eqNullSafe(F.col(f"{c}_new"))
-
-    classify = (
-        F.when(F.col("__in_target").isNull(), F.lit("insert"))
-        .when(F.col("__in_incoming").isNull(), F.lit("delete"))
-        .when(changed, F.lit("update"))
+    d = _keyed_diff(target, incoming, keys, compare_cols)
+    change = (
+        F.when(~F.col("__in_t"), F.lit("insert"))
+        .when(~F.col("__in_i"), F.lit("delete"))
+        .when(F.col("__chg"), F.lit("update"))
         .otherwise(F.lit("unchanged"))
     )
-    return joined.withColumn(change_col, classify).drop("__in_target", "__in_incoming")
+    return d.select(
+        *keys,
+        *[F.col(c).alias(f"{c}_old") for c in compare_cols],
+        *[F.col(f"__i_{c}").alias(f"{c}_new") for c in compare_cols],
+        change.alias(change_col),
+    )
 
 
 def scd2_asof(
@@ -289,41 +297,19 @@ def merge_scd3(
       - target-only keys: untouched;
       - incoming-only keys: inserted with ``prev`` NULL (no history).
 
-    Pure joins/unions on the key columns — AQE broadcasts the batch
-    side; no window, no sort."""
+    One projection of ``_keyed_diff`` on the tracked column — no
+    window, no sort."""
     keys = list(keys)
     prev_col = prev_col or f"prev_{tracked_col}"
     dtype = target.schema[tracked_col].dataType
-    inc = incoming.select(
-        *keys,
-        *[c for c in incoming.columns if c not in keys],
+    d = _keyed_diff(target, incoming, keys, [tracked_col])
+    prev = (
+        F.when(F.col("__chg"), F.col(tracked_col).cast(dtype))
+        .when(F.col("__in_t"), F.col(prev_col))
+        .alias(prev_col)
     )
-    t_alias, i_alias = target.alias("__t"), inc.alias("__i")
-    overlap = t_alias.join(i_alias, on=keys, how="inner")
-    changed = overlap.filter(
-        ~F.col(f"__i.{tracked_col}").eqNullSafe(F.col(f"__t.{tracked_col}"))
-    ).select(
-        *keys,
-        *[
-            F.col(f"__i.{c}").alias(c)
-            for c in inc.columns
-            if c not in keys
-        ],
-        F.col(f"__t.{tracked_col}").cast(dtype).alias(prev_col),
-    )
-    unchanged = overlap.filter(
-        F.col(f"__i.{tracked_col}").eqNullSafe(F.col(f"__t.{tracked_col}"))
-    ).select(*[F.col(f"__t.{c}").alias(c) for c in target.columns])
-    target_only = target.join(inc.select(*keys), on=keys, how="left_anti")
-    new_rows = inc.join(target.select(*keys), on=keys, how="left_anti").withColumn(
-        prev_col, F.lit(None).cast(dtype)
-    )
-    cols = target.columns
-    return (
-        changed.select(*cols)
-        .unionByName(unchanged.select(*cols))
-        .unionByName(target_only.select(*cols))
-        .unionByName(new_rows.select(*cols))
+    return d.select(
+        *[c if c in keys else prev if c == prev_col else _upserted(c) for c in target.columns]
     )
 
 
@@ -346,7 +332,7 @@ def merge_scd4(
     and partition-prunes on date(archived_at)).
 
     Returns ``(new_current, new_history)`` — both pure transforms of
-    the three inputs, computed from ONE key-partitioned diff:
+    the three inputs, computed from ONE ``_keyed_diff``:
       - overlap, any ``compare_cols`` CHANGED (null-safe): incoming row
         replaces the current row; the superseded current row is
         appended to history stamped ``archived_col = batch_ts``;
@@ -362,37 +348,14 @@ def merge_scd4(
     ``archived_col``; ``batch_ts`` is an explicit literal, never now()
     (deterministic + oracle-checkable, SURVEY.md §7.4.7).
 
-    Scale: pure key joins + unions — the batch side broadcasts under
-    AQE; history is touched only by an append (no join against it), so
-    the merge cost is independent of accumulated history size."""
+    Scale: history is touched only by an append (no join against it),
+    so the merge cost is independent of accumulated history size."""
     keys = list(keys)
-    compare_cols = list(compare_cols)
     cur_cols = current.columns
-    t_alias, i_alias = current.alias("__t"), incoming.alias("__i")
-    overlap = t_alias.join(i_alias, on=keys, how="inner")
-    diff = F.lit(False)
-    for c in compare_cols:
-        diff = diff | ~F.col(f"__i.{c}").eqNullSafe(F.col(f"__t.{c}"))
-    changed_new = overlap.filter(diff).select(
-        *keys,
-        *[F.col(f"__i.{c}").alias(c) for c in incoming.columns if c not in keys],
-    )
-    changed_old = overlap.filter(diff).select(
-        *[F.col(f"__t.{c}").alias(c) for c in cur_cols]
-    ).withColumn(archived_col, F.lit(batch_ts))
-    unchanged = overlap.filter(~diff).select(
-        *[F.col(f"__t.{c}").alias(c) for c in cur_cols]
-    )
-    current_only = current.join(incoming.select(*keys), on=keys, how="left_anti")
-    new_rows = incoming.join(current.select(*keys), on=keys, how="left_anti")
-    new_current = (
-        changed_new.select(*cur_cols)
-        .unionByName(unchanged.select(*cur_cols))
-        .unionByName(current_only.select(*cur_cols))
-        .unionByName(new_rows.select(*cur_cols))
-    )
-    new_history = history.unionByName(changed_old.select(*history.columns))
-    return new_current, new_history
+    d = _keyed_diff(current, incoming, keys, compare_cols)
+    new_current = d.select(*[c if c in keys else _upserted(c) for c in cur_cols])
+    archived = d.filter(F.col("__chg")).select(*cur_cols, F.lit(batch_ts).alias(archived_col))
+    return new_current, history.unionByName(archived.select(*history.columns))
 
 
 def merge_scd6(
@@ -436,90 +399,41 @@ def merge_scd6(
     ``batch_ts`` is an explicit literal, never now() (deterministic +
     oracle-checkable, SURVEY.md §7.4.7).
 
-    Scale: pure key joins/unions — the batch side broadcasts under
-    AQE. The type-1 sweep is a LEFT join of history against the
-    (batch-sized) changed-key set, not a scan-and-rewrite of the whole
-    dimension: cost tracks batch size, and on a partitioned lakehouse
-    table the same plan feeds a MERGE touching only affected key
-    partitions."""
+    Scale: the current rows' ``_keyed_diff`` against the batch yields
+    each key's 1-2 current-side versions through ``inline``. The type-1
+    sweep is a LEFT join of history against the (batch-sized)
+    changed-key set, not a scan-and-rewrite of the whole dimension:
+    cost tracks batch size."""
     keys = list(keys)
     current_col = current_col or f"current_{tracked_col}"
     cols = target.columns
-    cur = target.filter(F.col(flag_col))
-    hist = target.filter(~F.col(flag_col))
-    c_alias, i_alias = cur.alias("__t"), incoming.alias("__i")
-    changed = (
-        c_alias.join(i_alias, on=keys, how="inner")
-        .filter(
-            ~F.col(f"__i.{tracked_col}").eqNullSafe(F.col(f"__t.{tracked_col}"))
+    d = _keyed_diff(target.filter(F.col(flag_col)), incoming, keys, [tracked_col])
+    new_val = F.col(f"__i_{tracked_col}")
+
+    def version(prefix: str, over: dict[str, Column]) -> Column:
+        return F.struct(
+            *[(over[c] if c in over else F.col(c if c in keys else prefix + c)).alias(c) for c in cols]
         )
-        .select(
-            *keys,
-            *[
-                F.col(f"__i.{c}").alias(c)
-                for c in incoming.columns
-                if c not in keys
-            ],
-        )
+
+    closed = version("", {current_col: new_val, to_col: F.lit(batch_ts), flag_col: F.lit(False)})
+    to_null = F.lit(None).cast(target.schema[to_col].dataType)
+    fresh = version(
+        "__i_",
+        {current_col: new_val, from_col: F.lit(batch_ts), to_col: to_null, flag_col: F.lit(True)},
     )
-    chg_keys = changed.select(*keys)
-    # __chg marks a matched changed key so the history sweep can write a
-    # NULL new value: a COALESCE there would silently keep the stale
-    # mirror on a value→NULL change (review r16) — exactly the
-    # disagreement the sweep exists to prevent.
-    new_val = changed.select(
-        *keys,
-        F.col(tracked_col).alias("__new_val"),
-        F.lit(True).alias("__chg"),
+    versions = (
+        F.when(F.col("__chg"), F.array(closed, fresh))
+        .when(~F.col("__in_t"), F.array(fresh))
+        .otherwise(F.array(version("", {})))
     )
-    closed = (
-        cur.alias("__t")
-        .join(new_val, on=keys, how="inner")
-        .select(
-            *[
-                F.col(f"__t.{c}").alias(c)
-                for c in cols
-                if c not in (current_col, to_col, flag_col)
-            ],
-            F.col("__new_val").alias(current_col),
-            F.lit(batch_ts).alias(to_col),
-            F.lit(False).alias(flag_col),
-        )
+    # __swept marks a changed key so the sweep can write a NULL new value:
+    # a COALESCE would keep the stale mirror on a value→NULL change.
+    changed = d.filter(F.col("__chg")).select(
+        *keys, new_val.alias("__new_val"), F.lit(True).alias("__swept")
     )
-    fresh = changed.select(
-        *keys,
-        *[c for c in incoming.columns if c not in keys],
-        F.col(tracked_col).alias(current_col),
-        F.lit(batch_ts).alias(from_col),
-        F.lit(None).cast(target.schema[to_col].dataType).alias(to_col),
-        F.lit(True).alias(flag_col),
+    hist = target.filter(~F.col(flag_col)).join(changed, on=keys, how="left")
+    swept = hist.withColumn(
+        current_col,
+        F.when(F.col("__swept"), F.col("__new_val")).otherwise(F.col(current_col)),
     )
-    cur_pass = cur.join(chg_keys, on=keys, how="left_anti")
-    new_rows = incoming.join(cur.select(*keys), on=keys, how="left_anti").select(
-        *incoming.columns,
-        F.col(tracked_col).alias(current_col),
-        F.lit(batch_ts).alias(from_col),
-        F.lit(None).cast(target.schema[to_col].dataType).alias(to_col),
-        F.lit(True).alias(flag_col),
-    )
-    hist_swept = (
-        hist.alias("__h")
-        .join(new_val, on=keys, how="left")
-        .select(
-            *[
-                F.col(f"__h.{c}").alias(c)
-                for c in cols
-                if c != current_col
-            ],
-            F.when(F.col("__chg"), F.col("__new_val"))
-            .otherwise(F.col(f"__h.{current_col}"))
-            .alias(current_col),
-        )
-    )
-    return (
-        closed.select(*cols)
-        .unionByName(fresh.select(*cols))
-        .unionByName(cur_pass.select(*cols))
-        .unionByName(new_rows.select(*cols))
-        .unionByName(hist_swept.select(*cols))
-    )
+    return d.select(F.inline(versions)).unionByName(swept.select(*cols))

@@ -13,12 +13,17 @@ identically in Spark and in the DuckDB oracle* from the customer table
                     untouched groups.
 - BATCH_TS        : constant '2026-01-01 00:00:00' (never now() —
                     SURVEY.md §7.4.7).
+
+Each fixture is ONE SQL text over the ``customer`` table, written in the
+dialect DuckDB and Spark share: the oracles embed it, and the builders
+below run the same text in Spark (:func:`from_sql`).
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from n2kupdate_spark.sources import load
 
@@ -55,7 +60,7 @@ DIM_HISTORY_SQL = (
 SCD6_TARGET_SQL = (
     "SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment, "
     "c_acctbal AS current_acctbal, "
-    "'2025-01-01 00:00:00' AS valid_from, CAST(NULL AS VARCHAR) AS valid_to, "
+    "'2025-01-01 00:00:00' AS valid_from, CAST(NULL AS STRING) AS valid_to, "
     "TRUE AS is_current "
     "FROM customer WHERE c_custkey % 3 <> 0 "
     "UNION ALL "
@@ -71,97 +76,54 @@ MEMBERSHIP_INCOMING_SQL = (
     "SELECT c_nationkey AS grp, c_custkey AS member FROM customer "
     "WHERE c_custkey % 2 = 0 AND c_nationkey % 5 <> 1"
 )
+#: Validity-window targets: every row open since 2025-01-01 (SCD2), or
+#: every tracked value without a previous one yet (SCD3).
+MEMBERSHIP_SCD2_TARGET_SQL = (
+    "SELECT grp, member, '2025-01-01 00:00:00' AS valid_from, "
+    f"CAST(NULL AS STRING) AS valid_to FROM ({MEMBERSHIP_TARGET_SQL})"
+)
+DIM_SCD2_TARGET_SQL = (
+    "SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment, "
+    "'2025-01-01 00:00:00' AS valid_from, CAST(NULL AS STRING) AS valid_to "
+    f"FROM ({DIM_TARGET_SQL})"
+)
+DIM_SCD3_TARGET_SQL = (
+    "SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment, "
+    f"CAST(NULL AS DOUBLE) AS prev_c_acctbal FROM ({DIM_TARGET_SQL})"
+)
+
+
+def from_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run fixture SQL ``text`` in Spark, its ``customer`` table bound to
+    ``sf_dir``'s customer frame."""
+    return spark.sql(
+        re.sub(r"\bcustomer\b", "{customer}", text), customer=load(spark, sf_dir, "customer")
+    )
 
 
 def dim_target(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load(spark, sf_dir, "customer").filter(F.col("c_custkey") % 3 != 0)
+    return from_sql(spark, sf_dir, DIM_TARGET_SQL)
 
 
 def dim_incoming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") % 2 == 0)
-        .select(
-            "c_custkey",
-            "c_name",
-            "c_nationkey",
-            F.round(F.col("c_acctbal") + 10, 2).alias("c_acctbal"),
-            "c_mktsegment",
-        )
-    )
+    return from_sql(spark, sf_dir, DIM_INCOMING_SQL)
 
 
 def dim_incoming_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") % 2 == 0)
-        .select(
-            "c_custkey",
-            "c_name",
-            "c_nationkey",
-            F.round(
-                F.col("c_acctbal")
-                + F.when(F.col("c_custkey") % 4 == 0, F.lit(10.0)).otherwise(F.lit(0.0)),
-                2,
-            ).alias("c_acctbal"),
-            "c_mktsegment",
-        )
-    )
+    return from_sql(spark, sf_dir, DIM_INCOMING_PARTIAL_SQL)
 
 
 def dim_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") % 9 == 0)
-        .select(
-            "c_custkey",
-            "c_name",
-            "c_nationkey",
-            F.round(F.col("c_acctbal") - 50, 2).alias("c_acctbal"),
-            "c_mktsegment",
-            F.lit("2025-06-01 00:00:00").alias("archived_at"),
-        )
-    )
+    return from_sql(spark, sf_dir, DIM_HISTORY_SQL)
 
 
 def scd6_target(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = load(spark, sf_dir, "customer").filter(F.col("c_custkey") % 3 != 0)
-    cur = base.select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        "c_acctbal",
-        "c_mktsegment",
-        F.col("c_acctbal").alias("current_acctbal"),
-        F.lit("2025-01-01 00:00:00").alias("valid_from"),
-        F.lit(None).cast("string").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    hist = base.filter(F.col("c_custkey") % 5 == 0).select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        F.round(F.col("c_acctbal") - 50, 2).alias("c_acctbal"),
-        "c_mktsegment",
-        F.col("c_acctbal").alias("current_acctbal"),
-        F.lit("2024-06-01 00:00:00").alias("valid_from"),
-        F.lit("2025-01-01 00:00:00").alias("valid_to"),
-        F.lit(False).alias("is_current"),
-    )
-    return cur.unionByName(hist)
+    return from_sql(spark, sf_dir, SCD6_TARGET_SQL)
 
 
 def membership_target(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") % 3 != 0)
-        .select(F.col("c_nationkey").alias("grp"), F.col("c_custkey").alias("member"))
-    )
+    return from_sql(spark, sf_dir, MEMBERSHIP_TARGET_SQL)
 
 
 def membership_incoming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "customer")
-        .filter((F.col("c_custkey") % 2 == 0) & (F.col("c_nationkey") % 5 != 1))
-        .select(F.col("c_nationkey").alias("grp"), F.col("c_custkey").alias("member"))
-    )
+    return from_sql(spark, sf_dir, MEMBERSHIP_INCOMING_SQL)

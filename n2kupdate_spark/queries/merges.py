@@ -4,7 +4,9 @@ The reference's soul: idempotent staged merges (insert-missing /
 update-changed / close-removed) re-expressed as pure DataFrame transforms
 over derived target/incoming fixtures (queries.fixtures), so the DuckDB
 oracle can reproduce the exact output state. The JDBC execution of the same
-semantics is sources/jdbc.py (smoke-tested; no database in the driver loop).
+semantics is sources/jdbc.py: tests/test_jdbc_sink.py runs it on DuckDB and
+sqlite3 and asserts it equals these transforms, and tests/test_pg_live.py and
+the store_pg benchmark run it on a live PostgreSQL.
 """
 
 from __future__ import annotations
@@ -84,9 +86,7 @@ def merge_set_replace_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "merge_scd2_close",
     oracle=f"""
-    WITH t AS (SELECT grp, member, '2025-01-01 00:00:00' AS valid_from,
-                      CAST(NULL AS VARCHAR) AS valid_to
-               FROM ({FX.MEMBERSHIP_TARGET_SQL})),
+    WITH t AS ({FX.MEMBERSHIP_SCD2_TARGET_SQL}),
          i AS ({FX.MEMBERSHIP_INCOMING_SQL})
     SELECT t.grp, t.member, t.valid_from,
            CASE WHEN i.member IS NULL THEN '{FX.BATCH_TS}' ELSE NULL END AS valid_to
@@ -101,16 +101,8 @@ def merge_scd2_close_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Validity-window merge: open rows absent from the batch are closed at
     the explicit batch_ts; new keys open at batch_ts (destroy-timestamp
     semantics, deterministic — SURVEY.md §7.4.7)."""
-    from pyspark.sql import functions as F
-
-    target = FX.membership_target(spark, sf_dir).select(
-        "grp",
-        "member",
-        F.lit("2025-01-01 00:00:00").alias("valid_from"),
-        F.lit(None).cast("string").alias("valid_to"),
-    )
     return merge_scd2_close(
-        target,
+        FX.from_sql(spark, sf_dir, FX.MEMBERSHIP_SCD2_TARGET_SQL),
         FX.membership_incoming(spark, sf_dir),
         keys=["grp", "member"],
         batch_ts=FX.BATCH_TS,
@@ -120,9 +112,7 @@ def merge_scd2_close_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "merge_scd2_asof",
     oracle=f"""
-    WITH t AS (SELECT grp, member, '2025-01-01 00:00:00' AS valid_from,
-                      CAST(NULL AS VARCHAR) AS valid_to
-               FROM ({FX.MEMBERSHIP_TARGET_SQL})),
+    WITH t AS ({FX.MEMBERSHIP_SCD2_TARGET_SQL}),
          i AS ({FX.MEMBERSHIP_INCOMING_SQL}),
          hist AS (
              SELECT t.grp, t.member, t.valid_from,
@@ -156,14 +146,8 @@ def merge_scd2_asof_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from n2kupdate_spark.operators.merge import scd2_asof
 
-    target = FX.membership_target(spark, sf_dir).select(
-        "grp",
-        "member",
-        F.lit("2025-01-01 00:00:00").alias("valid_from"),
-        F.lit(None).cast("string").alias("valid_to"),
-    )
     hist = merge_scd2_close(
-        target,
+        FX.from_sql(spark, sf_dir, FX.MEMBERSHIP_SCD2_TARGET_SQL),
         FX.membership_incoming(spark, sf_dir),
         keys=["grp", "member"],
         batch_ts=FX.BATCH_TS,
@@ -180,10 +164,7 @@ def merge_scd2_asof_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "merge_scd2_changes",
     oracle=f"""
-    WITH t AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-                      '2025-01-01 00:00:00' AS valid_from,
-                      CAST(NULL AS VARCHAR) AS valid_to
-               FROM ({FX.DIM_TARGET_SQL})),
+    WITH t AS ({FX.DIM_SCD2_TARGET_SQL}),
          i AS ({FX.DIM_INCOMING_PARTIAL_SQL}),
          m AS (SELECT t.*, i.c_custkey AS i_key, i.c_name AS i_name,
                       i.c_nationkey AS i_nat, i.c_acctbal AS i_bal,
@@ -218,19 +199,8 @@ def merge_scd2_changes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ONE versioned transform — the reference's store_* triple over a
     destroy-timestamp table). The partial-change incoming fixture exercises
     every branch."""
-    from pyspark.sql import functions as F
-
-    target = FX.dim_target(spark, sf_dir).select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        "c_acctbal",
-        "c_mktsegment",
-        F.lit("2025-01-01 00:00:00").alias("valid_from"),
-        F.lit(None).cast("string").alias("valid_to"),
-    )
     return merge_scd2_changes(
-        target,
+        FX.from_sql(spark, sf_dir, FX.DIM_SCD2_TARGET_SQL),
         FX.dim_incoming_partial(spark, sf_dir),
         keys=["c_custkey"],
         compare_cols=["c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
@@ -280,11 +250,7 @@ def scd2_window_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "merge_scd3",
     oracle=f"""
-    WITH target AS (
-        SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-               CAST(NULL AS DOUBLE) AS prev_c_acctbal
-        FROM ({FX.DIM_TARGET_SQL})
-    ),
+    WITH target AS ({FX.DIM_SCD3_TARGET_SQL}),
     incoming AS ({FX.DIM_INCOMING_PARTIAL_SQL})
     SELECT i.c_custkey, i.c_name, i.c_nationkey, i.c_acctbal, i.c_mktsegment,
            t.c_acctbal AS prev_c_acctbal
@@ -315,13 +281,9 @@ def merge_scd3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     history; non-tracked attributes follow SCD1. The partial-incoming
     fixture exercises all four branches (changed / unchanged-overlap /
     target-only / new)."""
-    import pyspark.sql.functions as F
-
-    target = FX.dim_target(spark, sf_dir).withColumn(
-        "prev_c_acctbal", F.lit(None).cast("double")
-    )
     return merge_scd3(
-        target, FX.dim_incoming_partial(spark, sf_dir),
+        FX.from_sql(spark, sf_dir, FX.DIM_SCD3_TARGET_SQL),
+        FX.dim_incoming_partial(spark, sf_dir),
         keys=["c_custkey"], tracked_col="c_acctbal",
     )
 

@@ -23,7 +23,7 @@ insert-missing / update-changed / close-removed SQL inside one transaction
 - Staging names embed a run id (the reference hashes for the same reason:
   concurrent loads can't collide) and are dropped on success.
 
-``DbApiBackend`` drives any PEP 249 connection (DuckDB and sqlite3 in
+``DbApiBackend`` drives a PEP 249 connection (DuckDB and sqlite3 in
 tests/test_jdbc_sink.py, PostgreSQL through ``pg_psql.PsqlConnection``, a
 protocol-v3 client, in tests/test_pg_live.py); ``PgParallelBackend`` is the
 same backend over a session it opens from connection arguments. The
@@ -249,17 +249,6 @@ def _sql_type(dt: T.DataType) -> str:
         raise ValueError(f"unsupported staging column type: {dt}") from None
 
 
-def _paramstyle_marker(con) -> str:
-    """DBAPI placeholder for the connection's driver module (PEP 249
-    ``paramstyle``): qmark (sqlite3, duckdb) → '?', (py)format (psycopg2,
-    mysql) → '%s'."""
-    import sys
-
-    mod = sys.modules.get(type(con).__module__.split(".")[0])
-    style = getattr(mod, "paramstyle", "qmark")
-    return {"qmark": "?", "format": "%s", "pyformat": "%s"}.get(style, "?")
-
-
 def _arrow_batches(df: DataFrame):
     """Yield ``df``'s record batches from ONE Spark job: the Arrow collect
     behind ``DataFrame.toArrow()``, consumed one batch at a time, so the
@@ -305,37 +294,32 @@ def _py_values(col) -> list:
 
 
 class DbApiBackend:
-    """Execute the sink against any DBAPI connection (DuckDB, sqlite3,
-    psycopg2, ``pg_psql.PsqlConnection``).
+    """Execute the sink against a DBAPI connection with connection-level
+    ``execute`` and qmark parameters (DuckDB, sqlite3,
+    ``pg_psql.PsqlConnection``).
 
     The staging write streams the batch through the driver from one Spark
     job (``_arrow_batches`` — bounded driver memory, fact-scale batches
     OK); the merge statements are the same SQL every backend runs. Each
     driver gets a typed CREATE TABLE generated from ``df.schema`` and
     either bulk COPY of each record batch (``copy_arrow`` when the
-    connection offers it — PostgreSQL via ``PsqlConnection``) or a cursor
-    ``executemany`` of its rows (PEP 249 puts execute on cursors, not
-    connections — sqlite3/duckdb connection-level execute is an
-    extension). Exercised against DuckDB, sqlite3 and live PostgreSQL in
-    tests/test_jdbc_sink.py and tests/test_pg_live.py.
+    connection offers it — PostgreSQL via ``PsqlConnection``) or an
+    ``executemany`` of its rows. Everything runs on the connection itself,
+    never a cursor: duckdb's ``cursor()`` duplicates the connection, so a
+    cursor would detach from the session. Exercised against DuckDB,
+    sqlite3 and live PostgreSQL in tests/test_jdbc_sink.py and
+    tests/test_pg_live.py.
     """
 
     def __init__(self, con):
         self.con = con
-
-    def _cursor(self):
-        # Prefer connection-level execute where the driver extends PEP 249
-        # with it (sqlite3, duckdb — duckdb's cursor() DUPLICATES the
-        # connection, so a real cursor would detach from the session);
-        # strict drivers (psycopg2) only expose execute on cursors.
-        return self.con if hasattr(self.con, "execute") else self.con.cursor()
 
     def write_staging(self, df: DataFrame, staging: str) -> None:
         staging = _ident(staging)
         coldefs = ", ".join(
             f"{_ident(f.name)} {_sql_type(f.dataType)}" for f in df.schema.fields
         )
-        self._cursor().execute(f"CREATE TABLE {staging} ({coldefs})")
+        self.con.execute(f"CREATE TABLE {staging} ({coldefs})")
         batches = _arrow_batches(df)
         if hasattr(self.con, "copy_arrow"):
             # Bulk COPY path (PostgreSQL via PsqlConnection) — the same
@@ -344,35 +328,31 @@ class DbApiBackend:
             # record batch encoded by Arrow kernels as it arrives.
             self.con.copy_arrow(staging, _idents(df.columns), batches)
             return
-        cur = self._cursor()
         cols = ", ".join(_idents(df.columns))
-        ph = ", ".join([_paramstyle_marker(self.con)] * len(df.columns))
+        ph = ", ".join(["?"] * len(df.columns))
         sql = f"INSERT INTO {staging} ({cols}) VALUES ({ph})"
         for batch in batches:
             # duckdb's executemany rejects an empty sequence
             if batch.num_rows:
-                cur.executemany(sql, list(zip(*map(_py_values, batch.columns))))
+                self.con.executemany(sql, list(zip(*map(_py_values, batch.columns))))
 
     def fetchone(self, sql: str) -> tuple:
         """Run one query and return its first row (the staging probe)."""
-        cur = self._cursor()
-        # sqlite3 returns a cursor, duckdb and PsqlConnection the
-        # connection, psycopg2 None (the cursor holds the result)
-        return tuple((cur.execute(sql) or cur).fetchone())
+        # sqlite3 returns a cursor, duckdb and PsqlConnection the connection
+        return tuple(self.con.execute(sql).fetchone())
 
     def execute(self, stmts: Sequence[str]) -> None:
-        cur = self._cursor()
-        cur.execute("BEGIN TRANSACTION")
+        self.con.execute("BEGIN TRANSACTION")
         try:
             for s in stmts:
-                cur.execute(s)
-            cur.execute("COMMIT")
+                self.con.execute(s)
+            self.con.execute("COMMIT")
         except Exception:
-            cur.execute("ROLLBACK")
+            self.con.execute("ROLLBACK")
             raise
 
     def drop_staging(self, staging: str) -> None:
-        self._cursor().execute(f"DROP TABLE IF EXISTS {_ident(staging)}")
+        self.con.execute(f"DROP TABLE IF EXISTS {_ident(staging)}")
 
 
 class PgParallelBackend(DbApiBackend):

@@ -2,9 +2,8 @@
 no driver required.
 
 The reference's advertised target is PostgreSQL (⟨pub⟩ n2kupdate DESCRIPTION:
-updates the `n2kresult` PostgreSQL database), but this container ships no
-PEP 249 PostgreSQL driver (psycopg2/pg8000 probed absent, BASELINE.md §7)
-and no JDBC jar. :class:`PsqlConnection` speaks the wire protocol itself
+updates the `n2kresult` PostgreSQL database), but no PEP 249 PostgreSQL
+driver is installed here (BASELINE.md §7) and no JDBC jar. :class:`PsqlConnection` speaks the wire protocol itself
 with ``socket`` and ``struct``
 (https://www.postgresql.org/docs/15/protocol-flow.html), so the existing
 :class:`~n2kupdate_spark.sources.jdbc.DbApiBackend` — and with it the whole
@@ -24,11 +23,9 @@ Design notes:
   :class:`PsqlError`; notices are skipped; the ReadyForQuery status byte
   tells whether a transaction is open. ``executemany`` over an INSERT
   collapses to multi-row VALUES statements, one parse per 10k rows.
-- Parameters are bound client-side by literal substitution (qmark style —
-  the module-level ``paramstyle`` below is what
-  ``jdbc._paramstyle_marker`` resolves). Fine for fixtures and the
-  sink's own statements; this is an integration shim, not a production
-  driver.
+- Parameters are bound client-side by literal substitution of ``?``
+  (qmark style, as sqlite3 and DuckDB). Fine for fixtures and the sink's
+  own statements; this is an integration shim, not a production driver.
 - ``fetchall`` returns tuples of text values, SQL NULL as ``None``.
 - **Bulk loads use the real COPY path**: :meth:`PsqlConnection.copy_arrow`
   (Arrow record batches) and :meth:`PsqlConnection.copy_from_csv` (row
@@ -59,11 +56,6 @@ import socket
 import struct
 from collections.abc import Iterable, Sequence
 from itertools import chain
-
-#: PEP 249 module attribute consulted by jdbc._paramstyle_marker via the
-#: connection's root package — qmark keeps parity with sqlite3/duckdb.
-paramstyle = "qmark"
-
 
 def _literal(v) -> str:
     """Render a Python value as a PostgreSQL literal (qmark substitution)."""
@@ -217,7 +209,7 @@ def _data_row(body: bytes) -> tuple:
 class PsqlConnection:
     """PEP 249-shaped connection over one PostgreSQL protocol-v3 session:
     connection-level ``execute``/``executemany`` (the sqlite3/duckdb
-    extension ``DbApiBackend._cursor`` prefers), ``fetchall``/``fetchone``
+    extension ``DbApiBackend`` runs on), ``fetchall``/``fetchone``
     on the last statement's result, ``commit``/``rollback``/``close``."""
 
     def __init__(self, host: str = "/tmp/n2k_pg", port: int = 54329,

@@ -48,12 +48,7 @@ def test_set_replace_idempotent(spark, sf_dir):
 
 
 def test_scd2_close_idempotent_and_branches(spark, sf_dir):
-    target = FX.membership_target(spark, sf_dir).select(
-        "grp",
-        "member",
-        F.lit("2025-01-01 00:00:00").alias("valid_from"),
-        F.lit(None).cast("string").alias("valid_to"),
-    )
+    target = FX.from_sql(spark, sf_dir, FX.MEMBERSHIP_SCD2_TARGET_SQL)
     incoming = FX.membership_incoming(spark, sf_dir)
     once = merge_scd2_close(target, incoming, ["grp", "member"], FX.BATCH_TS)
     # branches all exercised
@@ -171,11 +166,7 @@ def test_scd2_changes_idempotent_and_branches(spark, sf_dir):
     from n2kupdate_spark.operators import merge_scd2_changes
     from n2kupdate_spark.queries import fixtures as FX
 
-    target = FX.dim_target(spark, sf_dir).select(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment",
-        F.lit("2025-01-01 00:00:00").alias("valid_from"),
-        F.lit(None).cast("string").alias("valid_to"),
-    )
+    target = FX.from_sql(spark, sf_dir, FX.DIM_SCD2_TARGET_SQL)
     inc = FX.dim_incoming_partial(spark, sf_dir)
     kw = dict(
         keys=["c_custkey"],
@@ -203,14 +194,10 @@ def test_scd3_idempotent_and_branches(spark, sf_dir):
     history untouched, target-only rows pass through, new keys insert
     with NULL history; null-safe compare (NULL → value counts as a
     change, value → equal value does not)."""
-    from pyspark.sql import functions as F
-
     from n2kupdate_spark.operators import merge_scd3
     from n2kupdate_spark.queries import fixtures as FX
 
-    target = FX.dim_target(spark, sf_dir).withColumn(
-        "prev_c_acctbal", F.lit(None).cast("double")
-    )
+    target = FX.from_sql(spark, sf_dir, FX.DIM_SCD3_TARGET_SQL)
     incoming = FX.dim_incoming_partial(spark, sf_dir)
     once = merge_scd3(target, incoming, keys=["c_custkey"], tracked_col="c_acctbal")
     twice = merge_scd3(once, incoming, keys=["c_custkey"], tracked_col="c_acctbal")

@@ -462,19 +462,13 @@ def test_bucketed_merge_family_runs_exchange_free(spark, sf_dir):
     equal the plain layout's, so the layout swap is purely physical."""
     import re
 
-    from pyspark.sql import functions as F
-
     from n2kupdate_spark.operators import merge_scd1, merge_scd2_changes
     from n2kupdate_spark.queries import fixtures as FX
     from n2kupdate_spark.sources.catalog import write_bucketed
 
     target = FX.dim_target(spark, sf_dir)
     incoming = FX.dim_incoming_partial(spark, sf_dir)
-    scd2_target = target.select(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment",
-        F.lit("2025-01-01 00:00:00").alias("valid_from"),
-        F.lit(None).cast("string").alias("valid_to"),
-    )
+    scd2_target = FX.from_sql(spark, sf_dir, FX.DIM_SCD2_TARGET_SQL)
     compare = ["c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
     write_bucketed(target, "n2k_mrg_t1", ["c_custkey"], 8)
     write_bucketed(scd2_target, "n2k_mrg_t2", ["c_custkey"], 8)
