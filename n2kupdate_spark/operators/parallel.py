@@ -31,13 +31,10 @@ _NPART_MEMO: dict[tuple[str, int], int] = {}
 
 def _plan_partitions(df: DataFrame) -> int:
     """Physical partition count of ``df``, memoized per analyzed plan."""
-    sc = df.sparkSession.sparkContext
-    app = getattr(sc, "_n2k_app_id", None)
-    if app is None:
-        app = sc.applicationId
-        sc._n2k_app_id = app
+    from n2kupdate_spark.sources.catalog import _app_id
+
     try:
-        key = (app, df.semanticHash())
+        key = (_app_id(df.sparkSession), df.semanticHash())
     except Exception:
         return df.rdd.getNumPartitions()
     n = _NPART_MEMO.get(key)

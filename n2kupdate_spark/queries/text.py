@@ -898,13 +898,16 @@ def text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: training is the bounded type-table collect; encoding is
     map-only with broadcast ranks and a per-batch word cache
-    (operators/tokenizer.py::bpe_encode) — no shuffle in the whole
-    plan beyond the type count."""
+    (operators/tokenizer.py::bpe_encode). The documents are sorted by
+    doc_id BEFORE the encoder, whose map keeps partition order, so the
+    output is in doc_id order and the one range exchange (beyond the
+    type count) reads parquet; sorting the encoder's output instead made
+    the range sampler run the Python encoder a second time."""
     from n2kupdate_spark.operators.tokenizer import bpe_encode, learn_bpe_merges
 
     d = load(spark, sf_dir, "documents", columns=["doc_id", "text", "n_chars"])
     merges = learn_bpe_merges(d, num_merges=_BPE_MERGES)
-    enc = bpe_encode(d, merges, carry_cols=("n_chars",))
+    enc = bpe_encode(d.orderBy("doc_id"), merges, carry_cols=("n_chars",))
     return enc.select(
         "doc_id",
         "n_bpe_tokens",
@@ -912,7 +915,7 @@ def text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.round(F.col("n_chars") / F.col("n_bpe_tokens") * 10000, 0) / 10000
         ).alias("chars_per_token"),
-    ).orderBy("doc_id")
+    )
 
 
 _NORM_SQL = (
@@ -1023,8 +1026,9 @@ def text_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: training is the bounded type-table collect; encoding is
     map-only with a broadcast piece table and a per-batch word cache
-    (operators/tokenizer.py::unigram_encode) — no shuffle beyond the
-    type count."""
+    (operators/tokenizer.py::unigram_encode). As in text_bpe_tokenize,
+    the documents are sorted by doc_id before the encoder, so the range
+    exchange reads parquet and the Python encoder runs once."""
     from n2kupdate_spark.operators.tokenizer import (
         learn_unigram_vocab,
         unigram_encode,
@@ -1032,7 +1036,7 @@ def text_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents", columns=["doc_id", "text", "n_chars"])
     pieces = learn_unigram_vocab(d, vocab_size=_UG_VOCAB)
-    enc = unigram_encode(d, pieces, carry_cols=("n_chars",))
+    enc = unigram_encode(d.orderBy("doc_id"), pieces, carry_cols=("n_chars",))
     return enc.select(
         "doc_id",
         "n_ug_tokens",
@@ -1040,7 +1044,7 @@ def text_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.round(F.col("n_chars") / F.col("n_ug_tokens") * 10000, 0) / 10000
         ).alias("chars_per_token"),
-    ).orderBy("doc_id")
+    )
 
 
 @register("text_langid_hashgram")  # rows-only (r9 capacity policy): the
@@ -1128,8 +1132,10 @@ def text_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     published segmentation rules, comparable with one two-join SQL.
 
     Scale: bounded type-table fit + broadcast-vocab map encode with the
-    shared per-batch word cache — no shuffle beyond the type count
-    (operators/tokenizer.py::wordpiece_encode)."""
+    shared per-batch word cache (operators/tokenizer.py::
+    wordpiece_encode). As in text_bpe_tokenize, the documents are sorted
+    by doc_id before the encoder, so the range exchange reads parquet
+    and the Python encoder runs once."""
     from n2kupdate_spark.operators.tokenizer import (
         learn_wordpiece_vocab,
         wordpiece_encode,
@@ -1137,7 +1143,7 @@ def text_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents", columns=["doc_id", "text", "n_chars"])
     vocab = learn_wordpiece_vocab(d, num_merges=_BPE_MERGES)
-    enc = wordpiece_encode(d, vocab, carry_cols=("n_chars",))
+    enc = wordpiece_encode(d.orderBy("doc_id"), vocab, carry_cols=("n_chars",))
     return enc.select(
         "doc_id",
         "n_wp_tokens",
@@ -1145,7 +1151,7 @@ def text_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.round(F.col("n_chars") / F.col("n_wp_tokens") * 10000, 0) / 10000
         ).alias("chars_per_token"),
-    ).orderBy("doc_id")
+    )
 
 
 @register("text_chunk_overlap")  # rows-only (r9 capacity policy,

@@ -191,6 +191,17 @@ def _stat_token(path: str) -> tuple | None:
         return None
 
 
+def _app_id(spark: SparkSession) -> str:
+    """The Spark application id, memoized on the context: reading it is a
+    py4j round trip, and every per-app cache asks for it on each call."""
+    sc = spark.sparkContext
+    app = getattr(sc, "_n2k_app_id", None)
+    if app is None:
+        app = sc.applicationId
+        sc._n2k_app_id = app
+    return app
+
+
 def load(
     spark: SparkSession,
     sf_dir: str,
@@ -214,13 +225,8 @@ def load(
             df = df.select(*columns)
         return df
     path = table_path(sf_dir, name)
-    sc = spark.sparkContext
-    app = getattr(sc, "_n2k_app_id", None)
-    if app is None:
-        app = sc.applicationId
-        sc._n2k_app_id = app
     token = _stat_token(path)
-    key = (app, sf_dir, name)
+    key = (_app_id(spark), sf_dir, name)
     ckey = tuple(columns) if columns else None
     with _PLAN_CACHE_LOCK:
         cached = _PLAN_CACHE.get(key)

@@ -4,6 +4,8 @@ broadcast joins — the properties that make the operators viable at 100 TB."""
 
 from __future__ import annotations
 
+import re
+
 from n2kupdate_spark.plans import (
     explain_str,
     has_broadcast_join,
@@ -369,8 +371,6 @@ def test_no_query_plan_has_scale_red_flags(spark, sf_dir):
     cartesian product, an unexpected nested-loop join, a row-at-a-time
     Python eval outside the UDF-surface ops, or an excessive exchange count.
     These are the plan shapes that break first at 100 TB."""
-    import re
-
     ALLOWED_BNLJ = {"join_cross_small", "join_theta_range"}
     # Composed multi-pipeline plans legitimately exceed the per-OPERATOR
     # exchange budget: the eval harnesses chain 2 ANN variants + comparison
@@ -424,6 +424,13 @@ def test_no_query_plan_has_scale_red_flags(spark, sf_dir):
         # all on the Σdeg²-bounded candidate table
         "graph_link_prediction",
     }
+    # A range exchange samples its input to cut ranges, then shuffles
+    # it: when its stage holds a Python node the sampler runs the Python
+    # work once and the shuffle again. Sort below the Python stage
+    # instead. Known offenders: these two group on a hash bucket
+    # (operators/timeseries.py::_bucketed_apply), so no sort below the
+    # grouped map can order their (user_id, ...) output.
+    ALLOWED_PYTHON_UNDER_RANGE = {"ts_changepoint_cusum", "ts_downsample_lttb"}
     # The 299 query builds are independent and spend their time in py4j
     # round-trips / the eager-build jobs of the fit-style queries — a
     # small driver pool overlaps them (the product's own §2.6 pattern)
@@ -448,7 +455,73 @@ def test_no_query_plan_has_scale_red_flags(spark, sf_dir):
         n_exch = len(re.findall(r"Exchange (hash|range|SinglePartition)", plan))
         if n_exch > 5 and name not in ALLOWED_MANY_EXCHANGES:
             issues.append((name, f"{n_exch} exchanges"))
+        if _python_under_range_exchange(plan) and name not in ALLOWED_PYTHON_UNDER_RANGE:
+            issues.append((name, "python stage under a range exchange"))
     assert not issues, issues
+
+
+_PYTHON_NODES = (
+    "MapInPandas", "MapInArrow", "ArrowEvalPython",
+    "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+)
+
+
+def _python_under_range_exchange(plan: str) -> bool:
+    """Whether an ``Exchange rangepartitioning`` in a physical plan's tree
+    string has a Python node in its stage: the subtree below it down to
+    the next exchange (where the stage ends)."""
+    nodes = []
+    for line in plan.splitlines():
+        m = re.search(r"[+:]- ", line)
+        depth, node = (m.start(), line[m.end():]) if m else (-1, line.strip())
+        nodes.append((depth, node))
+    for i, (depth, node) in enumerate(nodes):
+        if not node.startswith("Exchange rangepartitioning"):
+            continue
+        stage_end = None  # depth of an exchange whose subtree is skipped
+        for d, n in nodes[i + 1:]:
+            if d <= depth:
+                break
+            if stage_end is not None and d > stage_end:
+                continue
+            stage_end = d if "Exchange" in n.split(" ", 1)[0] else None
+            if stage_end is None and n.startswith(_PYTHON_NODES):
+                return True
+    return False
+
+
+def test_python_under_range_exchange_detector():
+    """The audit's stage walk on hand-written plan trees: the Python node
+    counts only inside the range exchange's own stage."""
+    sorted_after = (
+        "Sort [doc_id ASC], true, 0\n"
+        "+- Exchange rangepartitioning(doc_id ASC, 8), ENSURE_REQUIREMENTS\n"
+        "   +- Project [doc_id]\n"
+        "      +- MapInPandas _encode(doc_id, text), [doc_id], false\n"
+        "         +- FileScan parquet [doc_id,text]"
+    )
+    sorted_before = (
+        "MapInPandas _encode(doc_id, text), [doc_id], false\n"
+        "+- Sort [doc_id ASC], true, 0\n"
+        "   +- Exchange rangepartitioning(doc_id ASC, 8), ENSURE_REQUIREMENTS\n"
+        "      +- FileScan parquet [doc_id,text]"
+    )
+    behind_a_hash_stage = (
+        "Sort [k ASC], true, 0\n"
+        "+- Exchange rangepartitioning(k ASC, 8), ENSURE_REQUIREMENTS\n"
+        "   +- SortMergeJoin [k], [k], Inner\n"
+        "      :- Exchange hashpartitioning(k, 8), ENSURE_REQUIREMENTS\n"
+        "      :  +- FlatMapGroupsInPandas [k], f(k), [k]\n"
+        "      :     +- FileScan parquet [k]\n"
+        "      +- Project [k]\n"
+        "         +- ArrowEvalPython [udf(k)], [x], 200\n"
+        "            +- FileScan parquet [k]"
+    )
+    assert _python_under_range_exchange(sorted_after)
+    assert not _python_under_range_exchange(sorted_before)
+    assert _python_under_range_exchange(behind_a_hash_stage)
+    assert not _python_under_range_exchange(behind_a_hash_stage.replace(
+        "ArrowEvalPython [udf(k)], [x], 200", "Filter (k > 0)"))
 
 
 def test_bucketed_merge_family_runs_exchange_free(spark, sf_dir):

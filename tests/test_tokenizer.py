@@ -873,3 +873,43 @@ def test_wordpiece_encode_greedy_and_unk(spark, sf_dir):
     extra = spark.createDataFrame([(10**6, "zqé batch")], ["doc_id", "text"])
     row = wordpiece_encode(extra, vocab).collect()[0]
     assert row["wp_tokens"][0] == WP_UNK
+
+
+def test_tokenize_queries_sorted_before_the_encoder(spark, sf_dir, tmp_path):
+    """The three registered tokenizer queries sort the documents by
+    doc_id before the encoder rather than sorting its output. Over a
+    copy of the documents in shuffled row order, the collected frame is
+    in doc_id order, and its token counts equal the encoder's over the
+    unsorted documents."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from n2kupdate_spark.operators import tokenizer as T
+    from n2kupdate_spark.queries import QUERIES
+    from n2kupdate_spark.queries.text import _BPE_MERGES, _UG_VOCAB
+    from n2kupdate_spark.sources import load
+
+    t = pq.read_table(f"{sf_dir}/documents.parquet")
+    perm = np.random.RandomState(5).permutation(t.num_rows)
+    pq.write_table(t.take(perm), tmp_path / "documents.parquet")
+    sf_dir = str(tmp_path)
+    d = load(spark, sf_dir, "documents", columns=["doc_id", "text", "n_chars"])
+    cases = {
+        "text_bpe_tokenize": ("n_bpe_tokens", lambda: T.bpe_encode(
+            d, T.learn_bpe_merges(d, num_merges=_BPE_MERGES))),
+        "text_unigram_tokenize": ("n_ug_tokens", lambda: T.unigram_encode(
+            d, T.learn_unigram_vocab(d, vocab_size=_UG_VOCAB))),
+        "text_wordpiece_tokenize": ("n_wp_tokens", lambda: T.wordpiece_encode(
+            d, T.learn_wordpiece_vocab(d, num_merges=_BPE_MERGES))),
+    }
+    for name, (n_col, encode) in cases.items():
+        got = QUERIES[name](spark, sf_dir).toPandas()
+        assert len(got) > 1 and got["doc_id"].is_unique, name
+        pd.testing.assert_frame_equal(
+            got, got.sort_values("doc_id", ignore_index=True)
+        )
+        want = encode().select("doc_id", n_col).toPandas()
+        assert dict(zip(got["doc_id"], got[n_col])) == dict(
+            zip(want["doc_id"], want[n_col])
+        ), name
